@@ -14,10 +14,11 @@ import org.apache.spark.sql.types._
   * batchSize instead of being serialized through a single row loop.
   *
   * Upsert is delete-then-insert per batch inside one transaction —
-  * portable across dialects without MERGE/ON CONFLICT support (the
-  * spec runs embedded Derby, which has neither). Last-write-wins
-  * within a batch is by source order, matching Upsert.merge semantics
-  * when the batch is pre-deduplicated.
+  * portable across dialects without ON CONFLICT, and no slower than a
+  * `MERGE INTO` on the embedded Derby the spec runs (Derby 10.16 has
+  * MERGE but no ON CONFLICT). Last-write-wins within a batch is by
+  * source order, matching Upsert.merge semantics when the batch is
+  * pre-deduplicated.
   */
 object JdbcSink {
 

@@ -3,8 +3,13 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Json
+import graft.sources.HttpFetch.HttpStatusError
 
 /** Run-scoped artifact layout (reference: grocery_lib/io_utils.py:38-57 —
   * `<base>/grocery_runs/<run_id>/{raw,staged,out}`).
@@ -15,7 +20,7 @@ final case class RunPaths(base: String, runId: String) {
   val staged: String = s"$root/staged"
   val out: String = s"$root/out"
   val rawFile: String = s"$raw/transactions.json"
-  val stagedDir: String = s"$staged/transactions"
+  val stagedFile: String = s"$staged/transactions.ndjson"
   val enrichedDir: String = s"$out/enriched"
   val enrichedDocFile: String = s"$out/enriched.json"
   val reconcileFile: String = s"$out/reconcile.json"
@@ -24,21 +29,33 @@ final case class RunPaths(base: String, runId: String) {
 }
 
 /** Retry with fixed backoff (reference: DAG default_args retries —
-  * grocery_ingest_dag.py:70-75 etc.).
+  * grocery_ingest_dag.py:70-75 etc.). `retryable` picks the failures worth
+  * another try; the rest, and fatal errors (OOM, InterruptedException, …),
+  * propagate immediately.
   */
 object Retry {
-  def apply[T](retries: Int, delayMs: Long)(f: => T): T = {
+  def apply[T](retries: Int, delayMs: Long,
+      retryable: Throwable => Boolean = NonFatal(_))(f: => T): T = {
     var attempt = 0
     while (true) {
       try return f
       catch {
-        // fatal errors (OOM, InterruptedException, …) propagate immediately
-        case scala.util.control.NonFatal(_) if attempt < retries =>
+        case NonFatal(e) if attempt < retries && retryable(e) =>
           attempt += 1
           Thread.sleep(delayMs)
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** Failures that may pass on another try: a 5xx from the source, a
+    * timeout, I/O. A contract or data-quality error is deterministic, so
+    * retrying it only sleeps.
+    */
+  def transient(e: Throwable): Boolean = e match {
+    case HttpStatusError(status, _) => status >= 500
+    case _: java.io.IOException => true // includes HttpTimeoutException
+    case _ => false
   }
 }
 
@@ -54,15 +71,12 @@ object FailureNotifier {
       val dir = Paths.get(s"$base/failure_events")
       Files.createDirectories(dir)
       val eventId = s"$runId-$taskId-$tryNumber"
-      def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
       val json =
-        s"""{"event_id": "${esc(eventId)}", "pipeline_id": "${esc(pipelineId)}",
-           | "run_id": "${esc(runId)}", "task_id": "${esc(taskId)}",
-           | "try_number": $tryNumber,
-           | "exception_class": "${esc(e.getClass.getName)}",
-           | "exception": "${esc(Option(e.getMessage).getOrElse(""))}"}"""
-          .stripMargin.replace("\n", "")
+        s"""{"event_id": ${Json.str(eventId)}, "pipeline_id": ${Json.str(pipelineId)},""" +
+          s""" "run_id": ${Json.str(runId)}, "task_id": ${Json.str(taskId)},""" +
+          s""" "try_number": $tryNumber,""" +
+          s""" "exception_class": ${Json.str(e.getClass.getName)},""" +
+          s""" "exception": ${Json.str(Option(e.getMessage).getOrElse(""))}}"""
       Files.write(dir.resolve(s"$eventId.json"), json.getBytes(StandardCharsets.UTF_8))
     } catch { case _: Throwable => () } // never mask the original failure
   }
@@ -128,51 +142,64 @@ object GroceryPipeline {
       Files.write(target, body.substring(0, half).getBytes(StandardCharsets.UTF_8))
       midWrite.getOrElse(() => Thread.sleep(partialPauseMs))()
       Files.write(target, body.getBytes(StandardCharsets.UTF_8))
-    } else {
-      // atomic tmp+rename commit (io_utils.py:66-73)
-      val tmp = Paths.get(paths.rawFile + ".tmp")
-      Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    } else commitFile(paths.rawFile, body)
+  }
+
+  /** Atomic tmp+rename file commit (io_utils.py:66-73): a reader sees the
+    * previous file or the whole new one, never a torn write.
+    */
+  private def commitFile(target: String, body: String): Unit = {
+    val tmp = Paths.get(target + ".tmp")
+    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, Paths.get(target), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Stage 2 — validate: parse the raw envelope, apply the contract,
     * stage valid txns as line-delimited JSON (grocery_validate_dag.py:
-    * 44-79).
+    * 44-79). The envelope is one small document, so all of it happens on
+    * the driver: no Spark job.
     */
   def validate(spark: SparkSession, paths: RunPaths): Long = {
     Checks.requireArtifacts(spark, Seq(paths.rawFile), paths.runId)
     val raw = new String(Files.readAllBytes(Paths.get(paths.rawFile)),
       StandardCharsets.UTF_8)
-    val txns = ContractValidator.parseEnvelope(spark, raw)
+    val txns = ContractValidator.parseEnvelope(raw)
     ContractValidator.assertValid(txns)
-    val staged = txns.select(col("txn.*"))
-      .withColumn("run_id", lit(paths.runId))
-    staged.write.mode("overwrite").json(paths.stagedDir)
-    staged.count()
+    commitFile(paths.stagedFile, ContractValidator.toNdjson(txns, paths.runId))
+    txns.size.toLong
   }
 
   /** Stage 3 — enrich: staged NDJSON → dim joins + revenue → enriched
     * artifact (the reference's declared-but-unwritten fct_sales load,
     * SURVEY.md §2.5 J1). schema_drift surfaces here as a missing
-    * unit_price_cents → revenue_cents null → hard error.
+    * unit_price_cents → revenue_cents null → hard error. One write job:
+    * the row and null-revenue counts ride along via `observe`, and a
+    * failing artifact is deleted before the error is raised, so `load`'s
+    * artifact check still stops the run.
     */
   def enrich(spark: SparkSession, paths: RunPaths): Long = {
-    Checks.requireArtifacts(spark, Seq(paths.stagedDir), paths.runId)
+    Checks.requireArtifacts(spark, Seq(paths.stagedFile), paths.runId)
     val staged = spark.read
       .schema(ContractValidator.txnSchema.add("run_id", "string"))
-      .json(paths.stagedDir)
+      .json(paths.stagedFile)
       .withColumn("event_time", to_timestamp(col("event_time")))
-    val enriched = Enricher.enrich(spark, staged)
+    val counts = Observation()
+    Enricher.enrich(spark, staged)
       .withColumn("run_id", lit(paths.runId))
-    val nullRevenue = enriched.filter(col("revenue_cents").isNull).count()
-    if (nullRevenue > 0)
+      .observe(counts, count(lit(1)).as("rows"),
+        count_if(col("revenue_cents").isNull).as("null_revenue"))
+      .write.mode("overwrite").parquet(paths.enrichedDir)
+    val observed = counts.get
+    val nullRevenue = observed("null_revenue").asInstanceOf[Long]
+    if (nullRevenue > 0) {
+      val out = new org.apache.hadoop.fs.Path(paths.enrichedDir)
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
       throw new DataContractError(
         Seq(s"$$.transactions[*].unit_price_cents: $nullRevenue record(s) cannot derive revenue_cents"),
         nullRevenue)
-    enriched.write.mode("overwrite").parquet(paths.enrichedDir)
-    enriched.count()
+    }
+    observed("rows").asInstanceOf[Long]
   }
 
   /** Stage 3b — K4, the reference's enriched SINGLE-DOC envelope
@@ -196,10 +223,7 @@ object GroceryPipeline {
           col("enriched"))).as("doc"),
         size(col("enriched")).cast("long").as("n"))
       .head()
-    val tmp = Paths.get(paths.enrichedDocFile + ".tmp")
-    Files.write(tmp, row.getString(0).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(paths.enrichedDocFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    commitFile(paths.enrichedDocFile, row.getString(0))
     row.getLong(1)
   }
 
@@ -225,8 +249,8 @@ object GroceryPipeline {
     val mine = spark.read.parquet(warehouseDir)
       .filter(col("run_id") === paths.runId)
     val result = Checks.countCanary(mine, s"run=${paths.runId}", minRows)
-    val verdict =
-      s"""{"run_id": "${paths.runId}", "pass": ${result.pass}, "detail": "${result.detail}"}"""
+    val verdict = s"""{"run_id": ${Json.str(paths.runId)}, "pass": ${result.pass},""" +
+      s""" "detail": ${Json.str(result.detail)}}"""
     Files.write(Paths.get(paths.reconcileFile),
       verdict.getBytes(StandardCharsets.UTF_8))
     if (!result.pass) throw new DataQualityError(Seq(result))
@@ -234,14 +258,16 @@ object GroceryPipeline {
   }
 
   /** Full chained run with per-stage retries + failure events (C1/C4/K8).
-    * Returns the reconcile verdict.
+    * Only transient failures are retried ([[Retry.transient]]); the
+    * failure event's `try_number` counts the tries made. Returns the
+    * reconcile verdict.
     */
   def run(spark: SparkSession, base: String, warehouseDir: String,
       runId: String, scenario: String, n: Int = 40): CheckResult = {
     val paths = RunPaths(base, runId)
     def stage[T](taskId: String, retries: Int, delayMs: Long)(f: => T): T = {
       var tries = 0
-      try Retry(retries, delayMs) { tries += 1; f }
+      try Retry(retries, delayMs, Retry.transient) { tries += 1; f }
       catch {
         case e: Throwable =>
           FailureNotifier.notify(base, "grocery_pipeline", runId, taskId, tries, e)

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.HttpFetch.HttpStatusError
+
 /** Deterministic POS transaction source (reference: mock_pos_api/app.py
   * :15-36 — seeded RNG per (run_id, scenario); sku∈5, qty 1-5,
   * price∈{199,299,399,599,899}, tender∈{cash,card,ebt}, customer_id null
@@ -75,7 +77,7 @@ object PosGenerator {
     * writes. Driver-side by design: the reference source is one small HTTP
     * response per run, not a distributed dataset.
     *
-    * scenario=temporal_error → RuntimeException with probability 0.7
+    * scenario=temporal_error → HttpStatusError(500) with probability 0.7
     * (seeded; app.py:59-65). scenario=malformed_json → body truncated to
     * half (app.py:75-79).
     */
@@ -83,7 +85,7 @@ object PosGenerator {
       n: Int = 40): String = {
     if (scenario == Scenario.TemporalError.name &&
         Scenario.draw(runId, scenario, "http500") < 0.7)
-      throw new RuntimeException(s"POS API returned 500 for run_id=$runId")
+      throw HttpStatusError(500, s"POS API returned 500 for run_id=$runId")
     val rows = transactions(spark, runId, scenario, n)
       .toJSON.collect().mkString(",")
     val body = s"""{"ok": true, "run_id": "$runId", "transactions": [$rows]}"""

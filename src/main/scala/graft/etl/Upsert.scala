@@ -10,27 +10,40 @@ import org.apache.spark.sql.functions._
   * time; sql/init.sql:47-61 — `ON CONFLICT DO NOTHING` idempotent seeds).
   *
   * The row-at-a-time loop is deliberately NOT ported: the set-based
-  * equivalent is a single windowed merge — one shuffle on the key. At
-  * 100 TB the base side lives bucketed/partitioned on the key so only the
-  * (comparatively tiny) update batch shuffles; last-write-wins is
-  * decided by `row_number` over (source-priority, version) which AQE can
-  * skew-split safely because the dedup is per-key.
+  * equivalent deduplicates the batch on the key (only the batch
+  * shuffles), drops the table rows whose key the batch carries with a
+  * broadcast left-anti join, and appends the batch. The table side never
+  * shuffles, so a small batch costs a scan and a rewrite of the table,
+  * not a sort of it. The table holds one row per key; every write path
+  * here keeps it that way.
   */
 object Upsert {
 
+  /** One row per key: the greatest `versionCol` wins (ties arbitrary).
+    * The shuffle on the key keeps one partition per core: left to
+    * adaptive coalescing, a bulk first batch of a few tens of MB would
+    * sort and write in a single task.
+    */
+  def latestPerKey(rows: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(versionCol).desc)
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, keys.map(col): _*)
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+  }
+
   /** Last-write-wins merge: rows in `updates` replace same-keyed rows in
-    * `base`; within each side the greatest `versionCol` wins. Equivalent
-    * to ON CONFLICT DO UPDATE with deterministic ordering.
+    * `base` (which must be unique on `keys`); within `updates` the
+    * greatest `versionCol` wins. Equivalent to ON CONFLICT DO UPDATE with
+    * deterministic ordering. Keeps `base`'s column order.
     */
   def merge(base: DataFrame, updates: DataFrame, keys: Seq[String],
       versionCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__src").desc, col(versionCol).desc)
-    base.withColumn("__src", lit(0))
-      .unionByName(updates.withColumn("__src", lit(1)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__src", "__rn")
+    // the raw batch carries the same key set as its deduplicated form,
+    // so the broadcast side needs no shuffle
+    base.join(broadcast(updates.select(keys.map(col): _*)), keys, "left_anti")
+      .select(base.columns.map(col): _*) // a USING join moves the keys first
+      .unionByName(latestPerKey(updates, keys, versionCol))
   }
 
   /** ON CONFLICT DO NOTHING: append only rows whose key is absent. */
@@ -53,8 +66,11 @@ object Upsert {
   def upsertParquet(spark: SparkSession, dir: String, updates: DataFrame,
       keys: Seq[String], versionCol: String): Unit =
     replaceParquet(spark, dir) {
-      case Some(base) => merge(base, updates, keys, versionCol)
-      case None => updates
+      // fold the batch into the table's own partitions, so the file
+      // count does not grow by the batch's files on every upsert
+      case Some(base) =>
+        merge(base, updates, keys, versionCol).coalesce(base.rdd.getNumPartitions.max(1))
+      case None => latestPerKey(updates, keys, versionCol)
     }
 
   /** The swap itself, factored for any merge discipline (last-write-wins

@@ -1,6 +1,8 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +14,10 @@ import graft.testkit.SparkSpec
 class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp() = Files.createTempDirectory("grocery").toString
+
+  /** The failure event a stage attempt wrote, parsed. */
+  private def event(base: String, name: String): JsonNode =
+    new ObjectMapper().readTree(Paths.get(s"$base/failure_events/$name.json").toFile)
 
   test("ok: full chain passes, canary ≥ 10 rows, reconcile verdict written") {
     val base = tmp()
@@ -63,6 +69,9 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     }
     val events = new java.io.File(s"$base/failure_events").list()
     assert(events.exists(_.contains("validate")))
+    // a contract error is deterministic: no retry, one try recorded
+    assert(event(base, "run-mj-validate-1").get("try_number").asInt == 1)
+    assert(events.toSeq == Seq("run-mj-validate-1.json"))
   }
 
   test("schema_drift passes validation but fails in enrich (the contract gap)") {
@@ -72,6 +81,11 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(GroceryPipeline.validate(spark, paths) == 40) // gap: drift not caught
     val e = intercept[DataContractError] { GroceryPipeline.enrich(spark, paths) }
     assert(e.getMessage.contains("revenue_cents"))
+    // the failed stage leaves no artifact behind, so load cannot go on
+    assert(!Files.exists(Paths.get(paths.enrichedDir)))
+    intercept[java.io.FileNotFoundException] {
+      GroceryPipeline.load(spark, paths, s"$base/wh")
+    }
   }
 
   test("temporal_error: deterministic per runId; retries cannot save a doomed run") {
@@ -83,6 +97,37 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     }
     val events = new java.io.File(s"$base/failure_events").list()
     assert(events.exists(_.contains("ingest")))
+    // the simulated 500 is transient: ingest's 2 retries were all spent
+    val ev = event(base, s"$doomed-ingest-3")
+    assert(ev.get("exception_class").asText.endsWith("HttpStatusError"))
+    assert(ev.get("try_number").asInt == 3)
+  }
+
+  test("temporal_error: a run that draws no 500 commits") {
+    val lucky = (1 to 50).map(i => s"run-te$i")
+      .find(r => Scenario.draw(r, "temporal_error", "http500") >= 0.7).get
+    val base = tmp()
+    assert(GroceryPipeline.run(spark, base, s"$base/wh", lucky, "temporal_error").pass)
+    assert(spark.read.parquet(s"$base/wh").count() == 40)
+  }
+
+  test("failure events and reconcile verdicts are valid JSON for any run_id and message") {
+    val base = tmp()
+    val runId = "run-\"q\"\\x"
+    FailureNotifier.notify(base, "grocery_pipeline", runId, "enrich", 1,
+      new RuntimeException("ctl \u0001 tab\t nl\n"))
+    val ev = event(base, s"$runId-enrich-1")
+    assert(ev.get("run_id").asText == runId)
+    assert(ev.get("exception").asText == "ctl \u0001 tab\t nl\n")
+    val paths = RunPaths(base, runId)
+    paths.mkdirs()
+    val wh = s"$base/wh"
+    import spark.implicits._
+    Seq.tabulate(12)(i => (runId, s"t$i")).toDF("run_id", "txn_id").write.parquet(wh)
+    assert(GroceryPipeline.reconcile(spark, paths, wh).pass)
+    val verdict = new ObjectMapper().readTree(new java.io.File(paths.reconcileFile))
+    assert(verdict.get("run_id").asText == runId)
+    assert(verdict.get("pass").asBoolean)
   }
 
   test("partial_write: a concurrent reader inside the race window sees torn JSON") {
@@ -108,7 +153,7 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     val torn = new String(Files.readAllBytes(java.nio.file.Paths.get(paths.rawFile)))
     readerDone.countDown()
     intercept[DataContractError] {
-      ContractValidator.parseEnvelope(spark, torn)
+      ContractValidator.parseEnvelope(torn)
     }
     writer.join()
     // after the writer finishes the artifact is whole again

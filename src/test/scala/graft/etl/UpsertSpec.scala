@@ -89,4 +89,44 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
       ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
       ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
   }
+
+  test("merge keeps the table's column order") {
+    assert(Upsert.merge(base, updates, keys, "v").columns.toSeq == base.columns.toSeq)
+    val reordered = updates.select("v", "revenue_cents", "txn_id", "run_id")
+    assert(Upsert.merge(base, reordered, keys, "v").columns.toSeq == base.columns.toSeq)
+  }
+
+  test("upsertParquet deduplicates a first batch too: the greatest version wins") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val first = Seq(("r1", "t1", 100L, 1L), ("r1", "t1", 111L, 3L), ("r1", "t1", 105L, 2L),
+      ("r1", "t2", 200L, 1L)).toDF("run_id", "txn_id", "revenue_cents", "v")
+    Upsert.upsertParquet(spark, dir, first, keys, "v")
+    val expected = Set(("r1", "t1", 111L, 3L), ("r1", "t2", 200L, 1L))
+    assert(spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet == expected)
+    // the anti-join merge relies on a unique table: nothing resurfaces
+    Upsert.upsertParquet(spark, dir, Seq(("r1", "t3", 300L, 1L))
+      .toDF("run_id", "txn_id", "revenue_cents", "v"), keys, "v")
+    assert(spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet ==
+      expected + (("r1", "t3", 300L, 1L)))
+  }
+
+  test("30 small upserts keep the file count bounded and the column order") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    Upsert.upsertParquet(spark, dir, base, keys, "v")
+    def files = new java.io.File(dir).list().count(_.endsWith(".parquet"))
+    val initial = files
+    var model = base.as[(String, String, Long, Long)].collect()
+      .map(r => (r._1, r._2) -> r).toMap
+    (1 to 30).foreach { i =>
+      // one redelivered key, one new key per batch
+      val batch = Seq(("r1", s"t${i % 3 + 1}", i * 10L, i + 1L), ("r2", s"n$i", i.toLong, i + 1L))
+      Upsert.upsertParquet(spark, dir,
+        batch.toDF("run_id", "txn_id", "revenue_cents", "v"), keys, "v")
+      model ++= batch.map(r => (r._1, r._2) -> r)
+      assert(files <= initial.max(2), s"upsert $i: $files parquet files (started with $initial)")
+    }
+    val table = spark.read.parquet(dir)
+    assert(table.columns.toSeq == base.columns.toSeq)
+    assert(table.as[(String, String, Long, Long)].collect().toSet == model.values.toSet)
+  }
 }
