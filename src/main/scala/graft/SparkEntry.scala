@@ -241,11 +241,20 @@ object SparkEntry {
     // -> AvailableNow), history read back; shares q_scd2's FULL-rebuild
     // oracle, so streamed ≡ batch rebuild is hash-matched per round
     "q_stream_scd2" -> EventsQ.streamScd2,
-    // S2 — deterministic seeded POS source; oracle = the frozen
-    // pinned-VALUES capture (PosPinned — Spark's murmur3 has no SQL
-    // replay, but the output is a constant, so the pin hash-gates
-    // generator drift)
-    "q_pos_generate" -> ((s, _) => PosGenerator.transactions(s, "verify-run", "ok", 200)),
+    // S2 — the POS API's wire path: the driver-rendered envelope read
+    // back by Spark's JSON reader; oracle = the frozen pinned-VALUES
+    // capture of the one POS derivation (PosSourcePinned)
+    "q_pos_generate" -> ((s, _) => {
+      import org.apache.spark.sql.Encoders
+      import org.apache.spark.sql.functions.{col, explode}
+      import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+      val envelope = StructType(Seq(
+        StructField("transactions", ArrayType(graft.sources.PosDataSource.schema))))
+      s.read.schema(envelope)
+        .json(s.createDataset(
+          Seq(PosGenerator.envelopeJson("verify-run", "ok", 200)))(Encoders.STRING))
+        .select(explode(col("transactions")).as("t")).select("t.*")
+    }),
     // S1/S2 — DataSource V2 connector form of the POS source (rows-only)
     "q_pos_source" -> ((s, _) => s.read.format("graft-pos")
       .option("run_id", "verify-run").option("scenario", "ok")
@@ -323,9 +332,10 @@ object SparkEntry {
           col("totalprice").cast("double").as("totalprice"))
     }),
     // J1+A1 — grocery fct enrichment + daily mart over the generated source
-    // (rows-only for the same reason)
     "q_grocery_daily_mart" -> ((s, _) => Enricher.dailySalesMart(
-      Enricher.enrich(s, PosGenerator.transactions(s, "verify-run", "ok", 200)))),
+      Enricher.enrich(s, s.read.format("graft-pos")
+        .option("run_id", "verify-run").option("scenario", "ok")
+        .option("n", 200).load()))),
     // P1+A1 — retail staging cast + mart over the canonical ok seed
     // (computed oracle from the same VALUES fixture)
     "q_retail_mart" -> ((s, _) => RetailPipeline.martDailySales(
@@ -1028,12 +1038,12 @@ object SparkEntry {
     "q_count_canary" ->
       """SELECT 'orders_1995_plus' AS canary, count(*) AS n, count(*) >= 10 AS pass
         |FROM orders WHERE CAST(o_orderdate AS DATE) >= DATE '1995-01-01'""".stripMargin,
-    // the generator's deterministic output, frozen as pinned VALUES
-    // (tools/gen_pos_oracle.py): a mismatch means generator drift
+    // the one POS derivation's output, frozen as pinned VALUES
+    // (tools/gen_pos_oracle.py): a mismatch means generator drift. The
+    // wire path (envelope → JSON reader) and the DSv2 connector must
+    // both give exactly these rows
     "q_pos_generate" ->
-      s"""SELECT * FROM ${graft.etl.PosPinned.valuesSql}""",
-    // the DSv2 connector's own deterministic derivation (plain-Scala
-    // murmur3, partition-independent), frozen the same way
+      s"""SELECT * FROM ${graft.etl.PosSourcePinned.valuesSql}""",
     "q_pos_source" ->
       s"""SELECT * FROM ${graft.etl.PosSourcePinned.valuesSql}""",
     // the converged warehouse state after base upsert + (redelivered)
@@ -1230,11 +1240,12 @@ object SparkEntry {
         | CAST(SUM(val) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
         |FROM e""".stripMargin,
-    // engine-seeded generator → oracle computes the same mart from the
-    // pinned VALUES fixture (PosGeneratorSpec proves generator == fixture)
+    // the generated source → oracle computes the same mart from the
+    // pinned VALUES (q_pos_source proves connector == pin)
     "q_grocery_daily_mart" ->
-      s"""WITH fct(event_time, store_id, quantity, unit_price_cents) AS (
-        |  VALUES ${graft.etl.PosFixture.valuesSql}
+      s"""WITH fct AS (
+        |  SELECT event_time, store_id, quantity, unit_price_cents
+        |  FROM ${graft.etl.PosSourcePinned.valuesSql}
         |)
         |SELECT CAST(date_trunc('day', event_time) AS DATE) AS day, store_id,
         | count(*) AS txns,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fingerprints for these 10 docs are precomputed once and pinned in
   * [[sh64]] (DedupSpec's drift guard recomputes them from [[docs]]
   * every run), and DuckDB reproduces the pair relation from the same
-  * pinned values — the PosFixture pattern applied to simhash.
+  * pinned values — the pinned-VALUES oracle pattern applied to simhash.
   *
   * Corpus shape: a 4-doc near-dup cluster (1 ≡ 2 identical, 3 and 4
   * are 1-/2-word edits of 1) plus six unrelated docs. The hamming<=3

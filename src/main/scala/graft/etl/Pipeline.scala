@@ -105,7 +105,7 @@ object GroceryPipeline {
       n: Int = 40, partialPauseMs: Long = 1500,
       midWrite: Option[() => Unit] = None): Unit = {
     paths.mkdirs()
-    val body = PosGenerator.envelopeJson(spark, paths.runId, scenario, n)
+    val body = PosGenerator.envelopeJson(paths.runId, scenario, n)
     writeRaw(paths, scenario, body, partialPauseMs, midWrite)
   }
 

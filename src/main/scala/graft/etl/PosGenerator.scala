@@ -1,7 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.io.StringWriter
+import java.time.{Instant, ZoneOffset}
+import java.time.format.DateTimeFormatter
+import java.time.temporal.ChronoUnit
+
+import scala.util.hashing.MurmurHash3
+
+import com.fasterxml.jackson.core.JsonFactory
 
 import graft.sources.HttpFetch.HttpStatusError
 
@@ -10,86 +16,98 @@ import graft.sources.HttpFetch.HttpStatusError
   * price∈{199,299,399,599,899}, tender∈{cash,card,ebt}, customer_id null
   * with p=0.4).
   *
-  * Spark-first: `spark.range(n)` plus seeded `hash`/`pmod` column
-  * expressions — fully distributed and codegen'd, no RNG UDF, no driver
-  * loop. At 100 TB-scale synthetic loads the same expressions generate any
-  * `n` across executors with per-row determinism.
+  * Every field of row `id` is a plain-Scala seeded hash,
+  * `floorMod(MurmurHash3.stringHash(s"$seed::$tag::$id"), size)` with the
+  * seed of [[Scenario.seed]], so a row depends only on (run_id, scenario,
+  * id). [[txns]] is the one derivation. The `graft-pos` DSv2 connector
+  * ([[graft.sources.PosDataSource]]) calls it per partition for any `n`;
+  * [[envelopeJson]] calls it on the driver to render one run's small API
+  * response. `PosSourcePinned` freezes the first 200 rows of
+  * ("verify-run", "ok"), and `tools/gen_pos_oracle.py` replays the
+  * derivation independently.
   */
 object PosGenerator {
 
-  val stores: Seq[String] = Seq("SFO-001", "NYC-014", "AUS-002")
-  val skus: Seq[String] =
-    Seq("SKU-APPLE", "SKU-MILK", "SKU-BREAD", "SKU-COFFEE", "SKU-RICE")
-  val pricesCents: Seq[Int] = Seq(199, 299, 399, 599, 899)
-  val tenders: Seq[String] = Seq("cash", "card", "ebt")
+  val stores: IndexedSeq[String] = IndexedSeq("SFO-001", "NYC-014", "AUS-002")
+  val skus: IndexedSeq[String] =
+    IndexedSeq("SKU-APPLE", "SKU-MILK", "SKU-BREAD", "SKU-COFFEE", "SKU-RICE")
+  val pricesCents: IndexedSeq[Int] = IndexedSeq(199, 299, 399, 599, 899)
+  val tenders: IndexedSeq[String] = IndexedSeq("cash", "card", "ebt")
 
-  private val baseEpoch = 1704067200L // 2024-01-01T00:00:00Z
+  private val baseEpochMicros = 1704067200L * 1000000L // 2024-01-01T00:00:00Z
 
-  /** Deterministic field hash: murmur3 over (seed, field tag, row id). */
-  private def h(seed: Long, tag: String): Column =
-    hash(lit(seed), lit(tag), col("id"))
-
-  private def pick(seed: Long, tag: String, values: Seq[String]): Column =
-    element_at(array(values.map(lit): _*),
-      (pmod(h(seed, tag), lit(values.size)) + 1).cast("int"))
-
-  /** n deterministic wire transactions for (runId, scenario).
-    *
-    * scenario=schema_drift reproduces app.py:69-73 — record 0 loses
-    * `unit_price_cents` and gains `unit_price` instead (all other records
-    * keep the contract shape).
+  /** One wire transaction, fields in `PosDataSource.schema` order;
+    * `eventTime` is microseconds since the epoch.
     */
-  def transactions(spark: SparkSession, runId: String, scenario: String,
-      n: Int = 40): DataFrame = {
+  final case class Txn(eventTime: Long, txnId: String, storeId: String,
+      sku: String, quantity: Int, unitPriceCents: Int, tenderType: String,
+      customerId: Option[String])
+
+  /** Row `id` of (runId, scenario); the seed is hashed once per call. */
+  def txns(runId: String, scenario: String): Long => Txn = {
     val seed = Scenario.seed(runId, scenario)
-    val base = spark.range(n.toLong)
-      .withColumn("event_time",
-        timestamp_seconds(lit(baseEpoch) + col("id") * 7))
-      .withColumn("txn_id",
-        concat(lit(runId), lit("-txn-"), lpad(col("id").cast("string"), 6, "0")))
-      .withColumn("store_id", pick(seed, "store", stores))
-      .withColumn("sku", pick(seed, "sku", skus))
-      .withColumn("quantity", (pmod(h(seed, "qty"), lit(5)) + 1).cast("int"))
-      .withColumn("unit_price_cents",
-        element_at(array(pricesCents.map(lit): _*),
-          (pmod(h(seed, "price"), lit(pricesCents.size)) + 1).cast("int")))
-      .withColumn("tender_type", pick(seed, "tender", tenders))
-      .withColumn("customer_id",
-        when(pmod(h(seed, "cnull"), lit(10)) < 4, lit(null: String))
-          .otherwise(concat(lit("cust-"), md5(concat(lit(seed), col("id"))))))
-      .drop("id")
-    if (scenario == Scenario.SchemaDrift.name) {
-      // record 0: unit_price_cents → unit_price (app.py:69-73). The global
-      // window is fine here: the wire payload is one small API batch.
-      base.withColumn("__idx",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("txn_id"))) - 1)
-        .withColumn("unit_price",
-          when(col("__idx") === 0, col("unit_price_cents")))
-        .withColumn("unit_price_cents",
-          when(col("__idx") === 0, lit(null: Integer)).otherwise(col("unit_price_cents")))
-        .drop("__idx")
-    } else base
+    def hash(tag: String, id: Long): Int = MurmurHash3.stringHash(s"$seed::$tag::$id")
+    def pick[T](tag: String, id: Long, values: IndexedSeq[T]): T =
+      values(math.floorMod(hash(tag, id), values.size))
+    id => Txn(
+      baseEpochMicros + id * 7L * 1000000L,
+      f"$runId-txn-$id%06d",
+      pick("store", id, stores),
+      pick("sku", id, skus),
+      math.floorMod(hash("qty", id), 5) + 1,
+      pick("price", id, pricesCents),
+      pick("tender", id, tenders),
+      if (math.floorMod(hash("cnull", id), 10) < 4) None
+      else Some(s"cust-${hash("cust", id) & 0x7FFFFFFF}"))
   }
 
   /** The API envelope `{ok, run_id, transactions: [...]}` (app.py:77-81)
     * as a single JSON document string — the raw artifact the ingest stage
-    * writes. Driver-side by design: the reference source is one small HTTP
-    * response per run, not a distributed dataset.
+    * writes. Rendered on the driver, no Spark job: the reference source
+    * is one small HTTP response per run.
     *
     * scenario=temporal_error → HttpStatusError(500) with probability 0.7
-    * (seeded; app.py:59-65). scenario=malformed_json → body truncated to
-    * half (app.py:75-79).
+    * (seeded; app.py:59-65). scenario=schema_drift → record 0 carries
+    * `unit_price` instead of `unit_price_cents` (app.py:69-73).
+    * scenario=malformed_json → body truncated to half (app.py:75-79).
     */
-  def envelopeJson(spark: SparkSession, runId: String, scenario: String,
-      n: Int = 40): String = {
+  def envelopeJson(runId: String, scenario: String, n: Int = 40): String = {
     if (scenario == Scenario.TemporalError.name &&
         Scenario.draw(runId, scenario, "http500") < 0.7)
       throw HttpStatusError(500, s"POS API returned 500 for run_id=$runId")
-    val rows = transactions(spark, runId, scenario, n)
-      .toJSON.collect().mkString(",")
+    val txn = txns(runId, scenario)
+    val drift = scenario == Scenario.SchemaDrift.name
+    val rows = (0L until n).map(id => record(txn(id), drift && id == 0)).mkString(",")
     val body = s"""{"ok": true, "run_id": "$runId", "transactions": [$rows]}"""
     if (scenario == Scenario.MalformedJson.name) body.substring(0, body.length / 2)
     else body
+  }
+
+  private val json = new JsonFactory()
+  private val isoMillis =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(ZoneOffset.UTC)
+
+  /** One transaction as `Dataset.toJSON` renders its row under a UTC
+    * session: compact, keys in schema order, null fields left out,
+    * timestamps in millis. A drifted record moves `unit_price_cents` to
+    * a trailing `unit_price`.
+    */
+  private def record(t: Txn, drifted: Boolean): String = {
+    val w = new StringWriter()
+    val g = json.createGenerator(w)
+    g.writeStartObject()
+    g.writeStringField("event_time",
+      isoMillis.format(Instant.EPOCH.plus(t.eventTime, ChronoUnit.MICROS)))
+    g.writeStringField("txn_id", t.txnId)
+    g.writeStringField("store_id", t.storeId)
+    g.writeStringField("sku", t.sku)
+    g.writeNumberField("quantity", t.quantity)
+    if (!drifted) g.writeNumberField("unit_price_cents", t.unitPriceCents)
+    g.writeStringField("tender_type", t.tenderType)
+    t.customerId.foreach(g.writeStringField("customer_id", _))
+    if (drifted) g.writeNumberField("unit_price", t.unitPriceCents)
+    g.writeEndObject()
+    g.close()
+    w.toString
   }
 }

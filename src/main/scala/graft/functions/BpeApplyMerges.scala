@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * to 48 NESTED `aggregate(...)` higher-order functions — and
   * [[graft.text.Bpe.encodeWords]] a chain of one per vocabulary merge
   * (106 on the bench corpus). Each round/plan re-ran Catalyst analysis
-  * over that whole interpreted-HOF tree: a StageProbe run of
+  * over that whole interpreted-HOF tree: a per-stage probe of
   * q_bpe_train_batched read 11.0 s wall against 1.5 s of total
   * executor run time — the merge loop was driver-PLANNING-bound, not
   * compute-bound. This expression is one plan node regardless of batch

@@ -2,8 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Scan-parallelism floor (r16 — mechanism measured in
-  * `graft.BenchDedupDecomp`, BENCH_NOTES r16): a compact corpus
+/** Scan-parallelism floor (r16 — mechanism measured in a dedup
+  * decomposition bench, BENCH_NOTES r16): a compact corpus
   * arrives as ONE ≤ 128 MB parquet split (`files.maxPartitionBytes`),
   * so heavy per-row map stages — shingle+minhash, sign-LSH bucketing,
   * PQ encode, IVF assignment, brute-force scoring — run on ONE core

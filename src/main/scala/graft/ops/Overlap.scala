@@ -7,7 +7,7 @@ package graft.ops
   * cluster-label pipelines (text MinHash, image pHash, audio aHash,
   * video vHash), each a chain of small eager stages (decode barrier +
   * banded candidates + the star-contraction fixpoint) that alone keeps
-  * a fraction of the cores busy — a StageProbe run of
+  * a fraction of the cores busy — a per-stage probe of
   * q_corpus_filter_mm read 33 s wall against 66–82 core-seconds of
   * executor time on 32 cores (average parallelism ~2.5). Submitting the
   * independent builds from a small thread pool lets each build's tail

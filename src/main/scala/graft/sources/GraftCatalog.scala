@@ -54,7 +54,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private var root: Path = _
   private var warehouseUrl: Option[String] = None
   private var warehouseKeys: Map[String, Seq[String]] = Map.empty
-  private var warehouseBatch: Int = 1000
 
   private def spark: SparkSession = SparkSession.active
   private def fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -65,7 +64,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       throw new IllegalArgumentException(
         s"catalog $name requires option spark.sql.catalog.$name.root")))
     warehouseUrl = Option(options.get("warehouse.url"))
-    warehouseBatch = Option(options.get("warehouse.batchsize")).map(_.toInt).getOrElse(1000)
     // per-table upsert keys: spark.sql.catalog.<name>.warehouse.keys.<table>=k1,k2
     warehouseKeys = options.asScala.collect {
       case (k, v) if k.startsWith("warehouse.keys.") =>
@@ -110,7 +108,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   private def warehouseConf(table: String): WarehouseConf = {
     val keys = warehouseKeys.getOrElse(table.toLowerCase(java.util.Locale.ROOT), Seq.empty)
-    WarehouseConf(warehouseUrl.get, table, keys, warehouseBatch)
+    WarehouseConf(warehouseUrl.get, table, keys)
   }
 
   // ---------------------------------------------------------------- tables

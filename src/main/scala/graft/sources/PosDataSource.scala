@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.util.hashing.MurmurHash3
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,6 +11,8 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.etl.PosGenerator
 
 /** DataSource V2 connector for the deterministic POS transaction
   * generator — the reference's HTTP source + mock API (SURVEY.md §2.1
@@ -33,12 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * LIMIT is pushed into the scan (SupportsPushDownLimit), so
   * `.load().limit(10)` plans 10 generated rows, not n.
   *
-  * Generation here is plain-Scala seeded hashing (MurmurHash3), the
-  * same recipe as [[graft.etl.Scenario.seed]]; it intentionally does
-  * not promise value-parity with the column-expression generator
-  * [[graft.etl.PosGenerator]] — both are deterministic sources with the
-  * reference's distributions (sku∈5, qty 1–5, price set, tender∈3,
-  * customer_id null 40%).
+  * Each row comes from [[graft.etl.PosGenerator.txns]], the one POS
+  * derivation; [[graft.etl.PosGenerator.envelopeJson]] renders the same
+  * rows as the API's JSON envelope.
   */
 class PosDataSource extends TableProvider with DataSourceRegister {
 
@@ -62,18 +59,6 @@ object PosDataSource {
     StructField("unit_price_cents", IntegerType, nullable = false),
     StructField("tender_type", StringType, nullable = false),
     StructField("customer_id", StringType, nullable = true)))
-
-  val stores: IndexedSeq[String] = IndexedSeq("SFO-001", "NYC-014", "AUS-002")
-  val skus: IndexedSeq[String] =
-    IndexedSeq("SKU-APPLE", "SKU-MILK", "SKU-BREAD", "SKU-COFFEE", "SKU-RICE")
-  val pricesCents: IndexedSeq[Int] = IndexedSeq(199, 299, 399, 599, 899)
-  val tenders: IndexedSeq[String] = IndexedSeq("cash", "card", "ebt")
-  val baseEpochMicros: Long = 1704067200L * 1000000L // 2024-01-01T00:00:00Z
-
-  def draw(seed: Long, tag: String, id: Long, mod: Int): Int = {
-    val h = MurmurHash3.stringHash(s"$seed::$tag::$id")
-    math.floorMod(h, mod)
-  }
 }
 
 private[sources] class PosTable(options: CaseInsensitiveStringMap)
@@ -175,27 +160,21 @@ private[sources] final case class PosRange(runId: String, scenario: String,
 private[sources] class PosPartitionReader(range: PosRange)
     extends PartitionReader[InternalRow] {
 
-  import PosDataSource._
-
-  private val seed = graft.etl.Scenario.seed(range.runId, range.scenario)
+  private val txn = PosGenerator.txns(range.runId, range.scenario)
   private var id = range.start - 1
 
   override def next(): Boolean = { id += 1; id < range.end }
 
   override def get(): InternalRow = {
-    val customer =
-      if (draw(seed, "cnull", id, 10) < 4) null
-      else UTF8String.fromString(
-        s"cust-${MurmurHash3.stringHash(s"$seed::cust::$id") & 0x7FFFFFFF}")
-    InternalRow(
-      baseEpochMicros + id * 7L * 1000000L,
-      UTF8String.fromString(f"${range.runId}-txn-$id%06d"),
-      UTF8String.fromString(stores(draw(seed, "store", id, stores.size))),
-      UTF8String.fromString(skus(draw(seed, "sku", id, skus.size))),
-      draw(seed, "qty", id, 5) + 1,
-      pricesCents(draw(seed, "price", id, pricesCents.size)),
-      UTF8String.fromString(tenders(draw(seed, "tender", id, tenders.size))),
-      customer)
+    val t = txn(id)
+    InternalRow(t.eventTime,
+      UTF8String.fromString(t.txnId),
+      UTF8String.fromString(t.storeId),
+      UTF8String.fromString(t.sku),
+      t.quantity,
+      t.unitPriceCents,
+      UTF8String.fromString(t.tenderType),
+      t.customerId.map(UTF8String.fromString).orNull)
   }
 
   override def close(): Unit = ()

@@ -17,8 +17,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.etl.JdbcSink
-
 /** DataSource V2 connector for the warehouse LOAD boundary — the
   * reference's `INSERT … ON CONFLICT (run_id, txn_id) DO UPDATE` loader
   * (grocery_lib/pg.py:33-60) surfaced as a catalog-visible Spark table
@@ -33,18 +31,16 @@ import graft.etl.JdbcSink
   *     .option("url", jdbcUrl).option("dbtable", "fct_sales").load()
   * }}}
   *
-  * Write semantics mirror [[graft.etl.JdbcSink.upsertBatched]]: each
-  * task opens one connection and stages delete+insert batches inside a
-  * single transaction (portable across dialects without MERGE support),
-  * so a key's final value is the LAST source row — which makes a
-  * REDELIVERED batch converge to the same table state (the idempotence
-  * a retrying orchestrator needs; WarehouseDataSourceSpec proves it).
-  * The connector asks Spark to CLUSTER input by the key columns
-  * ([[RequiresDistributionAndOrdering]]), so one key's rows never race
-  * across connections — the DSv2-native form of JdbcSink's explicit
-  * repartition. Atomicity is per task transaction, not per job (a
-  * failed job leaves committed partitions — rerunning the idempotent
-  * upsert converges), exactly JdbcSink's contract.
+  * Writes: each task opens one connection and stages delete+insert
+  * batches inside a single transaction (portable across dialects
+  * without ON CONFLICT), so a key's final value is the LAST source row —
+  * which makes a REDELIVERED batch converge to the same table state (the
+  * idempotence a retrying orchestrator needs; WarehouseDataSourceSpec
+  * proves it). The connector asks Spark to CLUSTER input by the key
+  * columns ([[RequiresDistributionAndOrdering]]), so one key's rows
+  * never race across connections. Atomicity is per task transaction,
+  * not per job: a failed job leaves committed partitions, and rerunning
+  * the idempotent upsert converges.
   *
   * The read path serves catalog visibility and round-trip testing: one
   * partition, column pruning pushed into the SELECT. Partitioned scale
@@ -67,7 +63,7 @@ class WarehouseDataSource extends TableProvider with DataSourceRegister {
 }
 
 private[sources] final case class WarehouseConf(url: String, table: String,
-    keys: Seq[String], batchSize: Int,
+    keys: Seq[String],
     // String grouping/min/max/predicates only push down when the
     // warehouse collates binary like Spark; a collated warehouse (e.g.
     // Derby created with territory-based collation, or any locale-
@@ -89,14 +85,55 @@ private[sources] object WarehouseConf {
       throw new IllegalArgumentException("graft-warehouse requires option 'dbtable'"))
     val keys = get("keys").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    JdbcSink.requireIdent(table, "dbtable", allowQualified = true)
-    keys.foreach(JdbcSink.requireIdent(_, "key", allowQualified = false))
-    WarehouseConf(url, table, keys, get("batchSize").map(_.toInt).getOrElse(1000),
-      get("assumeBinaryCollation").forall(_.toBoolean))
+    WarehouseDataSource.requireIdent(table, "dbtable", allowQualified = true)
+    keys.foreach(WarehouseDataSource.requireIdent(_, "key", allowQualified = false))
+    WarehouseConf(url, table, keys, get("assumeBinaryCollation").forall(_.toBoolean))
   }
 }
 
 private[sources] object WarehouseDataSource {
+
+  /** Rows per DELETE/INSERT statement batch in [[WarehouseWriter]]. */
+  val BatchSize = 1000
+
+  private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
+  /** Identifiers are interpolated into SQL text — refuse anything that
+    * isn't a plain (optionally schema-qualified) identifier, so reserved
+    * words with quoting needs, mixed-case-sensitive names, or untrusted
+    * input can't produce broken/injectable statements.
+    */
+  def requireIdent(s: String, what: String, allowQualified: Boolean): Unit = {
+    val parts = if (allowQualified) s.split("\\.", -1).toSeq else Seq(s)
+    require(parts.nonEmpty && parts.forall(p => Ident.pattern.matcher(p).matches()),
+      s"$what '$s' is not a plain identifier ([A-Za-z_][A-Za-z0-9_]*)")
+  }
+
+  /** Spark→JDBC type code for binding: setNull(java.sql.Types.NULL) is
+    * rejected by Derby (and others) even for nullable columns.
+    */
+  def jdbcType(dt: DataType): Int = dt match {
+    case StringType => java.sql.Types.VARCHAR
+    case LongType => java.sql.Types.BIGINT
+    case IntegerType => java.sql.Types.INTEGER
+    case ShortType => java.sql.Types.SMALLINT
+    case DoubleType => java.sql.Types.DOUBLE
+    case FloatType => java.sql.Types.FLOAT
+    case BooleanType => java.sql.Types.BOOLEAN
+    case TimestampType => java.sql.Types.TIMESTAMP
+    case DateType => java.sql.Types.DATE
+    case _: DecimalType => java.sql.Types.DECIMAL
+    case BinaryType => java.sql.Types.BINARY
+    case _ => java.sql.Types.OTHER
+  }
+
+  def bind(ps: java.sql.PreparedStatement, idx: Int, v: Any,
+      sqlType: Int): Unit =
+    v match {
+      case null => ps.setNull(idx, sqlType)
+      case x: java.sql.Timestamp => ps.setTimestamp(idx, x)
+      case x: java.math.BigDecimal => ps.setBigDecimal(idx, x)
+      case x => ps.setObject(idx, x)
+    }
 
   /** Table schema from JDBC metadata (a WHERE 1=0 probe — no data read). */
   def tableSchema(conf: WarehouseConf): StructType = {
@@ -238,7 +275,7 @@ private[sources] class WarehouseScanBuilder(full: StructType,
   /** Column reference valid for interpolation, resolved case-insensitively. */
   private def sqlCol(name: String): Option[StructField] =
     full.fields.find(_.name.equalsIgnoreCase(name)).map { f =>
-      JdbcSink.requireIdent(f.name, "column", allowQualified = false)
+      WarehouseDataSource.requireIdent(f.name, "column", allowQualified = false)
       f
     }
 
@@ -352,7 +389,7 @@ private[sources] class WarehouseScanBuilder(full: StructType,
       full.fields.find(_.name.equalsIgnoreCase(nr.fieldNames()(0)))
         .filter(f => f.dataType != StringType || stringPushable(f))
         .map { f =>
-          JdbcSink.requireIdent(f.name, "column", allowQualified = false)
+          WarehouseDataSource.requireIdent(f.name, "column", allowQualified = false)
           f
         }
     case _ => None
@@ -422,7 +459,7 @@ private[sources] class WarehouseScanBuilder(full: StructType,
       // exotic column name stays readable as long as queries don't
       // select it
       required.fieldNames.foreach(
-        JdbcSink.requireIdent(_, "column", allowQualified = false))
+        WarehouseDataSource.requireIdent(_, "column", allowQualified = false))
       val filterDesc =
         if (pushed.isEmpty) ""
         else s" PushedFilters=[${pushed.map(_._2).mkString(", ")}]"
@@ -475,7 +512,7 @@ private[sources] class WarehouseWrite(schema: StructType, conf: WarehouseConf)
     extends Write with RequiresDistributionAndOrdering {
 
   schema.fieldNames.foreach(
-    JdbcSink.requireIdent(_, "column", allowQualified = false))
+    WarehouseDataSource.requireIdent(_, "column", allowQualified = false))
   // V2 write resolution renames the frame to the TABLE's column names
   // (Derby metadata upcases them) — resolve the user's key spelling to
   // the schema's case-insensitively, as Spark resolved the columns
@@ -498,8 +535,8 @@ private[sources] class WarehouseWrite(schema: StructType, conf: WarehouseConf)
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       new WarehouseWriterFactory(schema, resolved)
-    // per-task transactions already committed; job-level commit is the
-    // no-op JdbcSink documents (idempotent upsert makes retries converge)
+    // per-task transactions already committed; job-level commit is a
+    // no-op (idempotent upsert makes retries converge)
     override def commit(messages: Array[WriterCommitMessage]): Unit = ()
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
@@ -516,14 +553,14 @@ private[sources] class WarehouseWriterFactory(schema: StructType,
   * Two same-key rows in one staged batch would both survive the single
   * delete — the writer flushes the pending batch when a key repeats, so
   * the later row's delete lands AFTER the earlier insert (last-write-
-  * wins in source order, matching JdbcSink/Upsert.merge).
+  * wins in source order, matching Upsert.merge).
   */
 private[sources] class WarehouseWriter(schema: StructType, conf: WarehouseConf)
     extends DataWriter[InternalRow] {
 
   private val cols = schema.fieldNames
   private val keyIdx = conf.keys.map(schema.fieldIndex)
-  private val sqlTypes = schema.fields.map(f => JdbcSink.jdbcType(f.dataType))
+  private val sqlTypes = schema.fields.map(f => WarehouseDataSource.jdbcType(f.dataType))
 
   private val conn = DriverManager.getConnection(conf.url)
   conn.setAutoCommit(false)
@@ -562,14 +599,14 @@ private[sources] class WarehouseWriter(schema: StructType, conf: WarehouseConf)
       if (batchKeys.contains(key)) flush() // repeat key: order the batches
       batchKeys += key
       keyIdx.zipWithIndex.foreach { case (ki, i) =>
-        JdbcSink.bind(del, i + 1, vals(ki), sqlTypes(ki))
+        WarehouseDataSource.bind(del, i + 1, vals(ki), sqlTypes(ki))
       }
       del.addBatch()
     }
-    vals.indices.foreach(i => JdbcSink.bind(ins, i + 1, vals(i), sqlTypes(i)))
+    vals.indices.foreach(i => WarehouseDataSource.bind(ins, i + 1, vals(i), sqlTypes(i)))
     ins.addBatch()
     inBatch += 1
-    if (inBatch >= conf.batchSize) flush()
+    if (inBatch >= WarehouseDataSource.BatchSize) flush()
   }
 
   override def commit(): WriterCommitMessage = {

@@ -55,7 +55,7 @@ object Bpe {
   /** One batch of merges applied in rank order as ONE native
     * expression node ([[graft.functions.BpeApplyMerges]], r18) —
     * semantically the [[mergeOnce]] fold chain, but the plan stays
-    * constant-size however large the batch: a StageProbe run of the
+    * constant-size however large the batch: a per-stage probe of the
     * batched trainer read 11.0 s wall vs 1.5 s total executor run
     * time, i.e. the nested-HOF chain made every round driver-PLANNING-
     * bound (Catalyst re-analyzed a up-to-48-deep interpreted
@@ -175,8 +175,8 @@ object Bpe {
   /** [[trainBatched]] plus the per-round accepted-batch sizes — the
     * merges-per-pass evidence the scale claim rests on (a 30k-merge
     * tokenizer build collapses to hundreds of distributed passes ONLY
-    * if the accepted prefix stays near maxBatch; graft.BenchBpe
-    * measures the distribution at ≥1,000 merges).
+    * if the accepted prefix stays near maxBatch; BENCH_NOTES.md has
+    * the distribution at ≥1,000 merges).
     */
   def trainBatchedStats(words: DataFrame, merges: Int,
       maxBatch: Int = 48): (DataFrame, Seq[Int]) = {
@@ -324,8 +324,8 @@ object Bpe {
     trainIncrementalStats(words, merges, maxBatch)._1
 
   /** [[trainIncremental]] plus per-round accepted-batch sizes (the
-    * same evidence surface as [[trainBatchedStats]] — graft.BenchBpe
-    * measures both trainers under one protocol).
+    * same evidence surface as [[trainBatchedStats]], so both trainers
+    * are measured under one protocol).
     */
   def trainIncrementalStats(words: DataFrame, merges: Int,
       maxBatch: Int = 48): (DataFrame, Seq[Int]) = {

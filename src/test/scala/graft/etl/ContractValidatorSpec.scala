@@ -28,7 +28,7 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("generated ok payload passes the contract end-to-end") {
-    val body = PosGenerator.envelopeJson(spark, "run-cv", "ok")
+    val body = PosGenerator.envelopeJson("run-cv", "ok")
     val txns = ContractValidator.parseEnvelope(body)
     assert(txns.size == 40)
     ContractValidator.assertValid(txns)
@@ -37,7 +37,7 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
   test("drifted payload still passes — unit_price_cents is optional (the contract gap)") {
     // grocery_validate_dag.py:33: unit_price_cents typed but NOT required;
     // the schema_drift scenario sails through validation and fails later.
-    val body = PosGenerator.envelopeJson(spark, "run-gap", "schema_drift")
+    val body = PosGenerator.envelopeJson("run-gap", "schema_drift")
     ContractValidator.assertValid(ContractValidator.parseEnvelope(body))
   }
 
@@ -65,7 +65,7 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("malformed JSON document is a hard stop") {
-    val good = PosGenerator.envelopeJson(spark, "run-mf", "ok")
+    val good = PosGenerator.envelopeJson("run-mf", "ok")
     val truncated = good.substring(0, good.length / 2)
     intercept[DataContractError] {
       ContractValidator.parseEnvelope(truncated)
@@ -76,7 +76,7 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
     // a prefix cut inside the transactions array used to parse with
     // transactions = null and pass validation with 0 rows
     for (scenario <- Seq("ok", "schema_drift")) {
-      val body = PosGenerator.envelopeJson(spark, s"run-cut-$scenario", scenario)
+      val body = PosGenerator.envelopeJson(s"run-cut-$scenario", scenario)
       assert(ContractValidator.parseEnvelope(body).size == 40)
       val wrong = (0 until body.length).filter { i =>
         Try(ContractValidator.parseEnvelope(body.substring(0, i))) match {
@@ -106,7 +106,7 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("validate stage rejects truncated envelopes at sampled cut points") {
-    val body = PosGenerator.envelopeJson(spark, "run-cutv", "ok")
+    val body = PosGenerator.envelopeJson("run-cutv", "ok")
     // right after complete records (the cuts the old parse let through),
     // inside a record, and inside the envelope's header
     val afterRecord = Seq(0, 17, 38).map(k => body.indexOf("},{", body.indexOf("txn-" + f"$k%06d")) + 1)
@@ -130,8 +130,8 @@ class ContractValidatorSpec extends AnyFunSuite with SparkSpec {
       """{"event_time": "2024-01-01T00:00:01Z", "txn_id": "t2", "store_id": "SFO-001",
         | "sku": "SKU-MILK", "quantity": 1, "unit_price_cents": "299",
         | "tender_type": "card", "customer_id": 12, "extra": {"a": [1]}}""".stripMargin
-    val bodies = Seq(PosGenerator.envelopeJson(spark, "run-par", "ok"),
-      PosGenerator.envelopeJson(spark, "run-par", "schema_drift"), envelope(goodTxn, oddTypes))
+    val bodies = Seq(PosGenerator.envelopeJson("run-par", "ok"),
+      PosGenerator.envelopeJson("run-par", "schema_drift"), envelope(goodTxn, oddTypes))
     for (body <- bodies) {
       val viaSpark = Seq(body).toDF("raw")
         .select(explode(from_json(col("raw"), envelopeSchema)("transactions")).as("t"))

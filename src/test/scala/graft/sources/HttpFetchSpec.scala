@@ -39,7 +39,7 @@ class HttpFetchSpec extends AnyFunSuite with SparkSpec {
       // client asked for — the mock_pos_api contract
       val params = ex.getRequestURI.getQuery.split("&")
         .map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap
-      respond(ex, 200, PosGenerator.envelopeJson(spark,
+      respond(ex, 200, PosGenerator.envelopeJson(
         params("run_id"), params("scenario"), params("n").toInt))
     } { base =>
       val dir = java.nio.file.Files.createTempDirectory("http").toString

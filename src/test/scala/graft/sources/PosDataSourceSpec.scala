@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.PosGenerator
 import graft.testkit.SparkSpec
 
 class PosDataSourceSpec extends AnyFunSuite with SparkSpec {
@@ -31,9 +32,9 @@ class PosDataSourceSpec extends AnyFunSuite with SparkSpec {
     val df = read(2000).cache()
     try {
       assert(df.filter(col("quantity") < 1 || col("quantity") > 5).count() == 0)
-      assert(df.filter(!col("sku").isin(PosDataSource.skus: _*)).count() == 0)
+      assert(df.filter(!col("sku").isin(PosGenerator.skus: _*)).count() == 0)
       assert(df.filter(!col("unit_price_cents")
-        .isin(PosDataSource.pricesCents.map(Integer.valueOf): _*)).count() == 0)
+        .isin(PosGenerator.pricesCents.map(Integer.valueOf): _*)).count() == 0)
       val nullFrac = df.filter(col("customer_id").isNull).count() / 2000.0
       assert(nullFrac > 0.3 && nullFrac < 0.5, s"nullFrac=$nullFrac")
     } finally df.unpersist()

@@ -77,6 +77,35 @@ class WarehouseDataSourceSpec extends AnyFunSuite with SparkSpec {
     assert(out == Map("a" -> 7L, "b" -> 2L))
   }
 
+  test("a keyed write past the batch size from one task keeps the last row per key") {
+    exec("CREATE TABLE wh_big (k BIGINT NOT NULL, v BIGINT)")
+    val batch = WarehouseDataSource.BatchSize.toLong
+    val keys = batch + batch / 5
+    // 2.5 batches through one writer: two mid-task flushes, every key
+    // written twice, and the repeats land in later batches than the
+    // rows they replace
+    val n = 2 * batch + batch / 2
+    val df = (0L until n).map(i => (i % keys, i)).toDF("k", "v").coalesce(1)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1") // one clustered task
+    try writeTo(df, "wh_big", keys = Some("k"))
+    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val out = readBack("wh_big").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == (0L until n).groupBy(_ % keys).map { case (k, vs) => k -> vs.max })
+  }
+
+  test("a failed task rolls back its whole transaction") {
+    exec("CREATE TABLE wh_strict (id BIGINT NOT NULL PRIMARY KEY)")
+    exec("INSERT INTO wh_strict VALUES (5)")
+    val df = Seq(1L, 2L, 5L).toDF("id").coalesce(1) // 5 violates the PK
+    intercept[Exception] {
+      writeTo(df, "wh_strict", keys = None)
+    }
+    // the task's transaction rolled back: 1 and 2 must NOT be there
+    assert(readBack("wh_strict").collect().map(_.getLong(0)).toSeq == Seq(5L))
+  }
+
   test("keyed write plans a clustered shuffle; append does not") {
     exec("CREATE TABLE wh_k (k BIGINT NOT NULL, v BIGINT)")
     exec("CREATE TABLE wh_nok (k BIGINT NOT NULL, v BIGINT)")

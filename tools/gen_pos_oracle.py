@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
-"""Regenerate src/main/scala/graft/etl/PosPinned.scala — the frozen
-VALUES oracle for q_pos_generate.
+"""Regenerate src/main/scala/graft/etl/PosSourcePinned.scala — the frozen
+VALUES oracle of the one POS derivation (graft.etl.PosGenerator.txns) —
+or check an existing pin against an independent replay of it.
 
 Usage:
-  sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/out q_pos_generate,q_pos_source"
-  python3 tools/gen_pos_oracle.py /tmp/out/q_pos_generate PosPinned
+  sbt "runMain graft.Verify <sf_dir> /tmp/out q_pos_source"
   python3 tools/gen_pos_oracle.py /tmp/out/q_pos_source PosSourcePinned
+  python3 tools/gen_pos_oracle.py --check src/main/scala/graft/etl/PosSourcePinned.scala
 
-The generator is deterministic (seeded murmur3 column expressions), but
-no SQL engine replays Spark's murmur3 — so the oracle is a pinned
-capture. Run this ONLY after a deliberate generator change; an oracle
+Every field is a Scala MurmurHash3.stringHash of "<seed>::<tag>::<id>"
+taken with floorMod; no SQL engine has that hash, so the oracle is a
+pinned capture, and cross_check replays the derivation here from
+scratch before a capture is written (or, with --check, against the pin
+itself). Regenerate ONLY after a deliberate generator change; an oracle
 mismatch otherwise means the generator's output drifted, which is what
 the pin exists to catch.  Dev-tool only — not part of the shipped
 library.
@@ -17,6 +20,7 @@ library.
 import glob
 import re
 import sys
+from datetime import datetime, timezone
 
 import duckdb
 
@@ -50,27 +54,6 @@ def _fmix(h1, length):
     return h1
 
 
-def _hash_long(v, seed):
-    """Spark Murmur3_x86_32.hashLong: low word then high word."""
-    h1 = _mix_h1(seed & M32, _mix_k1(v & M32))
-    h1 = _mix_h1(h1, _mix_k1((v >> 32) & M32))
-    return _fmix(h1, 8)
-
-
-def _hash_bytes(b, seed):
-    """Spark Murmur3_x86_32.hashUnsafeBytes: 4-byte little-endian words,
-    then a SIGNED byte-at-a-time tail (Spark's own non-standard variant,
-    kept for compatibility since 2.3)."""
-    h1 = seed & M32
-    aligned = len(b) - len(b) % 4
-    for i in range(0, aligned, 4):
-        h1 = _mix_h1(h1, _mix_k1(int.from_bytes(b[i:i + 4], "little")))
-    for i in range(aligned, len(b)):
-        byte = b[i] if b[i] < 0x80 else b[i] - 256  # signed, as getByte
-        h1 = _mix_h1(h1, _mix_k1(byte & M32))
-    return _fmix(h1, len(b))
-
-
 def _scala_string_hash(s, seed=0xF7CA7FD2):
     """Scala MurmurHash3.stringHash: UTF-16 chars mixed two at a time."""
     h = seed & M32
@@ -88,59 +71,78 @@ def _signed32(v):
     return v - (1 << 32) if v >= (1 << 31) else v
 
 
-def _spark_hash(seed_long, tag, row_id):
-    """Spark hash(lit(seed), lit(tag), col(id)) — seed 42, chained."""
-    h = _hash_long(seed_long, 42)
-    h = _hash_bytes(tag.encode("utf-8"), h)
-    return _signed32(_hash_long(row_id, h))
-
-
-def _pmod(a, n):
-    r = a % n if a >= 0 else -((-a) % n)  # Java % truncates toward zero
-    return r + n if r < 0 else r
-
-
 STORES = ["SFO-001", "NYC-014", "AUS-002"]
 SKUS = ["SKU-APPLE", "SKU-MILK", "SKU-BREAD", "SKU-COFFEE", "SKU-RICE"]
 PRICES = [199, 299, 399, 599, 899]
 TENDERS = ["cash", "card", "ebt"]
+BASE_EPOCH = 1704067200  # 2024-01-01T00:00:00Z
+
+
+def _expected(run_id, scenario, row_id):
+    """Row row_id of (run_id, scenario), replayed from scratch: the seed is
+    Scenario.seed (unsigned stringHash of "run_id::scenario"), each field
+    floorMod(stringHash("seed::tag::id"), size) as in PosGenerator.txns."""
+    seed = _scala_string_hash(f"{run_id}::{scenario}")
+
+    def h(tag):
+        return _signed32(_scala_string_hash(f"{seed}::{tag}::{row_id}"))
+
+    def pick(tag, values):
+        return values[h(tag) % len(values)]  # Python % floors, as floorMod
+
+    secs = BASE_EPOCH + 7 * row_id
+    return {
+        "event_time": datetime.fromtimestamp(secs, timezone.utc)
+        .strftime("%Y-%m-%d %H:%M:%S"),
+        "store_id": pick("store", STORES),
+        "sku": pick("sku", SKUS),
+        "quantity": h("qty") % 5 + 1,
+        "unit_price_cents": pick("price", PRICES),
+        "tender_type": pick("tender", TENDERS),
+        "customer_id": None if h("cnull") % 10 < 4
+        else f"cust-{h('cust') & 0x7FFFFFFF}",
+    }
 
 
 def cross_check(df, scenario="ok"):
-    """Independent replay of PosGenerator's murmur3 field derivations
-    (graft.etl.PosGenerator.h / pick): the pin is captured from the
-    engine's own dump, so without this a bug present at capture time
-    would be frozen into the oracle. Every row's hash-derived fields are
-    recomputed here from a from-scratch murmur3 (Spark variant for the
-    field hashes, Scala variant for the seed) and must match the dump
-    BEFORE the capture is written."""
+    """Recompute every field of every row with the independent replay
+    (_expected): the pin is captured from the engine's own dump, so
+    without this a bug present at capture time would be frozen into the
+    oracle."""
     for _, r in df.iterrows():
         m = re.fullmatch(r"(.+)-txn-(\d{6,})", r.txn_id)
         if not m:
             raise SystemExit(f"unparseable txn_id {r.txn_id!r}")
-        run_id, row_id = m.group(1), int(m.group(2))
-        seed = _scala_string_hash(f"{run_id}::{scenario}") & M32
-
-        def pick(tag, values):
-            return values[_pmod(_spark_hash(seed, tag, row_id), len(values))]
-
-        expect = {
-            "store_id": pick("store", STORES),
-            "sku": pick("sku", SKUS),
-            "quantity": _pmod(_spark_hash(seed, "qty", row_id), 5) + 1,
-            "unit_price_cents": pick("price", PRICES),
-            "tender_type": pick("tender", TENDERS),
+        expect = _expected(m.group(1), scenario, int(m.group(2)))
+        got = {
+            "event_time": str(r.event_time)[:19],
+            "store_id": r.store_id,
+            "sku": r.sku,
+            "quantity": int(r.quantity),
+            "unit_price_cents": int(r.unit_price_cents),
+            "tender_type": r.tender_type,
+            "customer_id": r.customer_id if isinstance(r.customer_id, str) else None,
         }
         for k, want in expect.items():
-            got = r[k]
-            if (int(got) if k in ("quantity", "unit_price_cents") else got) != want:
+            if got[k] != want:
                 raise SystemExit(
-                    f"cross-check FAILED {r.txn_id} {k}: dump={got!r} "
-                    f"independent-murmur3={want!r} — do NOT pin this capture")
-    print(f"cross-check OK: {len(df)} rows match the independent murmur3 replay")
+                    f"cross-check FAILED {r.txn_id} {k}: got={got[k]!r} "
+                    f"replay={want!r} -- do NOT pin this capture")
+    print(f"cross-check OK: {len(df)} rows match the independent replay")
 
 
-def main(dump_dir: str, obj: str = "PosPinned", scenario: str = "ok") -> None:
+def check_pin(path: str, scenario: str = "ok") -> None:
+    """Replay the VALUES of a generated pin file through cross_check."""
+    text = open(path).read()
+    body = text[text.index('"""') + 3:text.rindex('"""')]
+    sql = "\n".join(line.split("|", 1)[1] if "|" in line else line
+                    for line in body.splitlines())
+    df = duckdb.connect().execute(
+        f"SELECT * FROM {sql} ORDER BY txn_id").df()
+    cross_check(df, scenario)
+
+
+def main(dump_dir: str, obj: str = "PosSourcePinned", scenario: str = "ok") -> None:
     files = glob.glob(f"{dump_dir}/*.parquet")
     if not files:
         raise SystemExit(f"no parquet under {dump_dir}")
@@ -186,8 +188,12 @@ object {obj} {{
 
 if __name__ == "__main__":
     # usage: gen_pos_oracle.py <dump_dir> [ObjectName] [scenario]
-    # the scenario must match the one the dump was captured under -- the
+    #        gen_pos_oracle.py --check <pin.scala> [scenario]
+    # the scenario must match the one the rows were generated under -- the
     # generator seed folds it in, so replaying "ok" against a drift/dupe
     # capture hard-fails the cross-check even when the capture is valid
-    main(sys.argv[1], sys.argv[2] if len(sys.argv) > 2 else "PosPinned",
-         sys.argv[3] if len(sys.argv) > 3 else "ok")
+    if sys.argv[1] == "--check":
+        check_pin(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else "ok")
+    else:
+        main(sys.argv[1], sys.argv[2] if len(sys.argv) > 2 else "PosSourcePinned",
+             sys.argv[3] if len(sys.argv) > 3 else "ok")
