@@ -10,44 +10,55 @@ import org.apache.spark.sql.functions._
   * The reference's enrich task is a pass-through — grocery_enrich_dag.py:
   * 39-52 — so this implements the declared target state).
   *
-  * Dims are tiny (3 stores, 5 products) → broadcast-hash joins: the fact
-  * side never shuffles, which is exactly the shape you want when the fact
-  * is 100 TB and the dims are kilobytes.
+  * Dims are tiny (3 stores, 5 products), so the join is a lookup in a
+  * map literal: the fact side never shuffles, and no broadcast job runs
+  * per call — the shape you want when the fact is 100 TB and the dims are
+  * kilobytes.
   */
 object Enricher {
 
-  /** dim_store seed rows (sql/init.sql:47-52). */
+  /** dim_store seed rows (sql/init.sql:47-52): id, name, region, opened. */
+  private val stores = Seq(
+    ("SFO-001", "Market St Grocery", "west", "2017-03-01"),
+    ("NYC-014", "Union Sq Grocery", "east", "2019-09-12"),
+    ("AUS-002", "Congress Ave Grocery", "south", "2020-01-20"))
+
+  /** dim_product seed rows (sql/init.sql:54-61): sku, name, category,
+    * perishable.
+    */
+  private val products = Seq(
+    ("SKU-APPLE", "Fuji Apple", "produce", true),
+    ("SKU-MILK", "Whole Milk 1L", "dairy", true),
+    ("SKU-BREAD", "Sourdough Loaf", "bakery", true),
+    ("SKU-COFFEE", "Ground Coffee 340g", "beverages", false),
+    ("SKU-RICE", "Jasmine Rice 2kg", "pantry", false))
+
+  /** dim_store as a table, from the seed rows above. */
   def dimStore(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq(
-      ("SFO-001", "Market St Grocery", "west", "2017-03-01"),
-      ("NYC-014", "Union Sq Grocery", "east", "2019-09-12"),
-      ("AUS-002", "Congress Ave Grocery", "south", "2020-01-20"))
-      .toDF("store_id", "store_name", "region", "opened_date")
+    stores.toDF("store_id", "store_name", "region", "opened_date")
       .withColumn("opened_date", to_date(col("opened_date")))
   }
 
-  /** dim_product seed rows (sql/init.sql:54-61). */
+  /** dim_product as a table, from the seed rows above. */
   def dimProduct(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Seq(
-      ("SKU-APPLE", "Fuji Apple", "produce", true),
-      ("SKU-MILK", "Whole Milk 1L", "dairy", true),
-      ("SKU-BREAD", "Sourdough Loaf", "bakery", true),
-      ("SKU-COFFEE", "Ground Coffee 340g", "beverages", false),
-      ("SKU-RICE", "Jasmine Rice 2kg", "pantry", false))
-      .toDF("sku", "product_name", "category", "is_perishable")
+    products.toDF("sku", "product_name", "category", "is_perishable")
   }
 
-  /** Staged transactions → fct_sales rows: broadcast dim joins +
-    * revenue_cents = quantity × unit_price_cents (BIGINT, init.sql:39).
-    * Inner joins: a txn referencing an unknown store/sku is a referential
-    * breach and drops out (the validate stage catches those upstream).
+  /** Staged transactions → fct_sales rows: region and category looked up
+    * from the dims, revenue_cents = quantity × unit_price_cents (BIGINT,
+    * init.sql:39). Inner-join semantics: a txn referencing an unknown
+    * store/sku is a referential breach and drops out (the validate stage
+    * catches those upstream).
     */
   def enrich(spark: SparkSession, txns: DataFrame): DataFrame = {
+    val regionOf = typedLit(stores.map(s => s._1 -> s._3).toMap)
+    val categoryOf = typedLit(products.map(p => p._1 -> p._3).toMap)
     txns
-      .join(broadcast(dimStore(spark)), Seq("store_id"))
-      .join(broadcast(dimProduct(spark)), Seq("sku"))
+      .withColumn("region", try_element_at(regionOf, col("store_id")))
+      .withColumn("category", try_element_at(categoryOf, col("sku")))
+      .filter(col("region").isNotNull && col("category").isNotNull)
       .withColumn("revenue_cents",
         col("quantity").cast("long") * col("unit_price_cents").cast("long"))
       .select(

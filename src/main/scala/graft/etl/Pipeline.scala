@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Json
@@ -170,7 +170,7 @@ object GroceryPipeline {
     txns.size.toLong
   }
 
-  /** Stage 3 — enrich: staged NDJSON → dim joins + revenue → enriched
+  /** Stage 3 — enrich: staged NDJSON → dim lookups + revenue → enriched
     * artifact (the reference's declared-but-unwritten fct_sales load,
     * SURVEY.md §2.5 J1). schema_drift surfaces here as a missing
     * unit_price_cents → revenue_cents null → hard error. One write job:
@@ -180,13 +180,8 @@ object GroceryPipeline {
     */
   def enrich(spark: SparkSession, paths: RunPaths): Long = {
     Checks.requireArtifacts(spark, Seq(paths.stagedFile), paths.runId)
-    val staged = spark.read
-      .schema(ContractValidator.txnSchema.add("run_id", "string"))
-      .json(paths.stagedFile)
-      .withColumn("event_time", to_timestamp(col("event_time")))
     val counts = Observation()
-    Enricher.enrich(spark, staged)
-      .withColumn("run_id", lit(paths.runId))
+    enrichPlan(spark.read.schema(stagedSchema).json(paths.stagedFile), paths.runId)
       .observe(counts, count(lit(1)).as("rows"),
         count_if(col("revenue_cents").isNull).as("null_revenue"))
       .write.mode("overwrite").parquet(paths.enrichedDir)
@@ -201,6 +196,14 @@ object GroceryPipeline {
     }
     observed("rows").asInstanceOf[Long]
   }
+
+  private val stagedSchema = ContractValidator.txnSchema.add("run_id", "string")
+
+  /** Staged rows → the enriched artifact's rows under `runId`. */
+  private def enrichPlan(staged: DataFrame, runId: String): DataFrame =
+    Enricher.enrich(staged.sparkSession,
+        staged.withColumn("event_time", to_timestamp(col("event_time"))))
+      .withColumn("run_id", lit(runId))
 
   /** Stage 3b — K4, the reference's enriched SINGLE-DOC envelope
     * (`{"run_id", "scenario", "enriched": [...]}` —
@@ -228,26 +231,37 @@ object GroceryPipeline {
   }
 
   /** Stage 4 — load: keyed upsert into the warehouse fact directory
-    * (grocery_lib/pg.py:33-60 ON CONFLICT semantics, set-based).
+    * (grocery_lib/pg.py:33-60 ON CONFLICT semantics, set-based). Every
+    * row carries the run's id, so the upsert rewrites that run_id's
+    * bucket only.
     */
   def load(spark: SparkSession, paths: RunPaths, warehouseDir: String): Unit = {
     Checks.requireArtifacts(spark, Seq(paths.enrichedDir), paths.runId)
     // inserted_at default NOW() (init.sql:29) — orders batches for
     // last-write-wins within the same key
-    val enriched = spark.read.parquet(paths.enrichedDir)
+    // the artifact's schema is the enrich plan's, analysed over no rows:
+    // a parquet read without a schema runs an inference job
+    val schema = enrichPlan(spark.createDataFrame(
+      java.util.List.of[Row](), stagedSchema), paths.runId).schema
+    val enriched = spark.read.schema(schema).parquet(paths.enrichedDir)
       .withColumn("inserted_at", current_timestamp())
     Upsert.upsertParquet(spark, warehouseDir, enriched,
-      keys = Seq("run_id", "txn_id"), versionCol = "inserted_at")
+      keys = Seq("run_id", "txn_id"), versionCol = "inserted_at",
+      firstKey = Some(paths.runId))
   }
 
   /** Stage 5 — reconcile: count canary under THIS run's id (fixing the
     * reference's wrong-run_id bug, grocery_reconcile_dag.py:17) and write
-    * the verdict artifact.
+    * the verdict artifact. On a bucketed warehouse the scan prunes to the
+    * run's bucket; a flat one (an older layout) is filtered whole.
     */
   def reconcile(spark: SparkSession, paths: RunPaths, warehouseDir: String,
       minRows: Long = 10): CheckResult = {
-    val mine = spark.read.parquet(warehouseDir)
-      .filter(col("run_id") === paths.runId)
+    val table = spark.read.parquet(warehouseDir)
+    val ofRun = col("run_id") === paths.runId
+    val mine = table.filter(
+      if (!table.columns.contains(Upsert.BucketCol)) ofRun
+      else col(Upsert.BucketCol) === Upsert.bucketOf(paths.runId) && ofRun)
     val result = Checks.countCanary(mine, s"run=${paths.runId}", minRows)
     val verdict = s"""{"run_id": ${Json.str(paths.runId)}, "pass": ${result.pass},""" +
       s""" "detail": ${Json.str(result.detail)}}"""

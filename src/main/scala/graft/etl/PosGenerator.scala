@@ -9,6 +9,7 @@ import scala.util.hashing.MurmurHash3
 
 import com.fasterxml.jackson.core.JsonFactory
 
+import graft.Json
 import graft.sources.HttpFetch.HttpStatusError
 
 /** Deterministic POS transaction source (reference: mock_pos_api/app.py
@@ -78,7 +79,7 @@ object PosGenerator {
     val txn = txns(runId, scenario)
     val drift = scenario == Scenario.SchemaDrift.name
     val rows = (0L until n).map(id => record(txn(id), drift && id == 0)).mkString(",")
-    val body = s"""{"ok": true, "run_id": "$runId", "transactions": [$rows]}"""
+    val body = s"""{"ok": true, "run_id": ${Json.str(runId)}, "transactions": [$rows]}"""
     if (scenario == Scenario.MalformedJson.name) body.substring(0, body.length / 2)
     else body
   }

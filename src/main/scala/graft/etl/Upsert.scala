@@ -1,9 +1,11 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Keyed upsert semantics (reference: grocery_lib/pg.py:33-60 —
   * `INSERT ... ON CONFLICT (run_id, txn_id) DO UPDATE`, executed row-at-a-
@@ -12,21 +14,71 @@ import org.apache.spark.sql.functions._
   * The row-at-a-time loop is deliberately NOT ported: the set-based
   * equivalent deduplicates the batch on the key (only the batch
   * shuffles), drops the table rows whose key the batch carries with a
-  * broadcast left-anti join, and appends the batch. The table side never
-  * shuffles, so a small batch costs a scan and a rewrite of the table,
-  * not a sort of it. The table holds one row per key; every write path
-  * here keeps it that way.
+  * broadcast left-anti join, and appends the batch. The merge itself
+  * never shuffles the table side. The table holds one row per key; every
+  * write path here keeps it that way.
+  *
+  * '''Layout.''' An [[upsertParquet]] table is [[Buckets]] Hive-style
+  * directories `<dir>/__bucket=k`, `k = pmod(hash(<first key>), 16)`
+  * ([[bucket]]). `spark.read.parquet(dir)` returns the table's columns
+  * plus `__bucket` (int); a filter on `__bucket` prunes the scan to one
+  * directory. The bucket count stays at or below
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), so
+  * listing the table runs no Spark job. A caller whose batches never
+  * carry one first-key value (the streaming sinks keyed by query or event
+  * id) keeps its table flat instead.
+  *
+  * '''Two commit paths,''' one swap protocol ([[swapIn]]):
+  *  - a batch whose caller names its one first-key value (a pipeline
+  *    run: one run_id), into a bucketed table, merges against that
+  *    value's bucket only and swaps `__bucket=k` through the hidden
+  *    `.__bucket=k.tmp` and `.__bucket=k.old` inside the table (Spark's
+  *    listing skips names that start with `.`), so a 40-row load
+  *    rewrites 1/16 of the table;
+  *  - any other batch (the first write, a batch with no first-key value
+  *    named, a flat table) merges against the whole table and swaps it
+  *    through the siblings `<dir>__tmp` and `<dir>__old`. A bucketed
+  *    table is shuffled by bucket and written partitioned by `__bucket`;
+  *    an empty one is one schema-only file in bucket 0, so it stays
+  *    readable. A flat table is written as it is merged, as
+  *    [[replaceParquet]] writes.
+  *
+  * '''Recovery''' runs before every upsert, at both levels, with one
+  * rule: first for the table, then for each bucket, an old copy whose
+  * live copy is missing (a crash between the two renames) is renamed
+  * back, and any other leftover tmp or old copy is deleted.
+  *
+  * '''Read window.''' Between the two renames of a bucket swap, a reader
+  * sees the table without that bucket; between those of a table swap, it
+  * sees no table. A pipeline never reads the warehouse while its load
+  * runs. On a real deployment this is a MERGE INTO on a table format
+  * (Delta/Iceberg) whose snapshot commit is truly atomic.
   */
 object Upsert {
 
-  /** One row per key: the greatest `versionCol` wins (ties arbitrary).
-    * The shuffle on the key keeps one partition per core: left to
-    * adaptive coalescing, a bulk first batch of a few tens of MB would
-    * sort and write in a single task.
+  /** The bucket column of an [[upsertParquet]] table. */
+  val BucketCol = "__bucket"
+
+  /** Buckets per table: a constant, since it must stay at or below the
+    * parallel partition discovery threshold (see the object doc).
     */
-  def latestPerKey(rows: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(versionCol).desc)
-    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism, keys.map(col): _*)
+  val Buckets = 16
+
+  /** The bucket of a first-key value. */
+  def bucket(firstKey: Column): Column = pmod(hash(firstKey), lit(Buckets))
+
+  /** One row per key: the greatest `versionCol` wins (ties arbitrary).
+    * The shuffle keeps one partition per core: left to adaptive
+    * coalescing, a bulk first batch of a few tens of MB would sort and
+    * write in a single task. It hashes on `clusterBy` when given (a
+    * prefix of the window's keys, so the window needs no second
+    * shuffle), else on the keys.
+    */
+  def latestPerKey(rows: DataFrame, keys: Seq[String], versionCol: String,
+      clusterBy: Seq[String] = Nil): DataFrame = {
+    val w = Window.partitionBy((clusterBy ++ keys).map(col): _*).orderBy(col(versionCol).desc)
+    rows.repartition(rows.sparkSession.sparkContext.defaultParallelism,
+        (if (clusterBy.isEmpty) keys else clusterBy).map(col): _*)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -52,61 +104,160 @@ object Upsert {
     existing.unionByName(
       rows.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti"))
 
-  /** Upsert a batch into a parquet "table" directory with a rename swap:
-    * write merged output to `<dir>__tmp`, rename the live table aside to
-    * `<dir>__old`, rename tmp in, then drop the old copy — the same
-    * commit-by-rename idea as the reference's atomic artifact writer
-    * (grocery_lib/io_utils.py:66-73). There is no window with no live
-    * data: a crash before the tmp→target rename leaves the old table
-    * recoverable at `__old`, and a failed write cleans up its tmp. On a
-    * real deployment this is a MERGE INTO on a table format
-    * (Delta/Iceberg) whose snapshot commit is truly atomic; plain parquet
-    * needs the rewrite-and-swap.
+  /** Upsert a batch into the parquet table at `dir` (layout, commit
+    * paths and recovery: see the object doc). Neither the batch nor a
+    * flat table may carry a column named [[BucketCol]].
+    *
+    * `firstKey` is the one value of `keys.head` that the caller knows
+    * every row of the batch carries (a pipeline run's run_id). With it,
+    * the batch commits into that value's bucket alone; a row in another
+    * bucket fails the write and leaves the table as it was. Without it,
+    * the batch takes the whole-table path, so its plan runs once.
+    *
+    * `bucketed = false` keeps the table flat (and flattens a bucketed
+    * one): every upsert merges the whole table and writes it without a
+    * shuffle. That suits a table whose batches never carry one first-key
+    * value, such as a streaming sink keyed by query or event id; there
+    * the bucketed whole-table path only adds a shuffle and 16 files.
     */
   def upsertParquet(spark: SparkSession, dir: String, updates: DataFrame,
-      keys: Seq[String], versionCol: String): Unit =
-    replaceParquet(spark, dir) {
-      // fold the batch into the table's own partitions, so the file
-      // count does not grow by the batch's files on every upsert
-      case Some(base) =>
-        merge(base, updates, keys, versionCol).coalesce(base.rdd.getNumPartitions.max(1))
-      case None => latestPerKey(updates, keys, versionCol)
+      keys: Seq[String], versionCol: String, firstKey: Option[Any] = None,
+      bucketed: Boolean = true): Unit = {
+    require(!updates.columns.contains(BucketCol),
+      s"upsert batch has a column named $BucketCol, which the table layout reserves")
+    require(bucketed || firstKey.isEmpty, "a flat table has no bucket to name")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = new Path(dir)
+    recover(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old"))
+    if (fs.exists(table)) (0 until Buckets).foreach { k =>
+      val live = bucketDir(table, k)
+      recover(fs, live, hidden(live, "tmp"), hidden(live, "old"))
     }
+    val isBucketed = fs.exists(table) &&
+      fs.listStatus(table).exists(_.getPath.getName.startsWith(BucketCol + "="))
+    firstKey.filter(_ => isBucketed) match {
+      case Some(value) =>
+        val k = bucketOf(value)
+        val live = bucketDir(table, k)
+        val schema = StructType(spark.read.parquet(dir).schema.filterNot(_.name == BucketCol))
+        val batch = updates.filter(when(bucket(col(keys.head)) === k, lit(true))
+          .otherwise(raise_error(
+            lit(s"upsert batch for ${keys.head} = $value has a row outside its bucket $k"))))
+        swapIn(fs, live, hidden(live, "tmp"), hidden(live, "old")) { tmp =>
+          val base =
+            if (fs.exists(live)) spark.read.schema(schema).parquet(live.toString)
+            else spark.createDataFrame(java.util.List.of[Row](), schema)
+          merge(base, batch, keys, versionCol)
+            // fold the batch into the bucket's own partitions, so its file
+            // count does not grow by the batch's files on every upsert
+            .coalesce(base.rdd.getNumPartitions.max(1))
+            .write.mode("overwrite").parquet(tmp.toString)
+        }
+      case None => replaceTable(spark, fs, dir, bucketed) {
+        case Some(prev) =>
+          val base = if (isBucketed) prev.drop(BucketCol) else {
+            require(!prev.columns.contains(BucketCol),
+              s"table $dir has a column named $BucketCol, which the table layout reserves")
+            prev
+          }
+          val merged = merge(base, updates, keys, versionCol)
+          if (bucketed) merged.withColumn(BucketCol, bucket(col(keys.head)))
+            .repartition(spark.sparkContext.defaultParallelism, col(BucketCol))
+          // fold the batch into the table's own partitions, so the file
+          // count does not grow by the batch's files on every upsert
+          else merged.coalesce(prev.rdd.getNumPartitions.max(1))
+        case None if bucketed =>
+          // one window over (bucket, keys) on a shuffle by bucket: its sort
+          // already orders the partitioned write, which adds none of its own
+          latestPerKey(updates.withColumn(BucketCol, bucket(col(keys.head))),
+            keys, versionCol, clusterBy = Seq(BucketCol))
+        case None => latestPerKey(updates, keys, versionCol)
+      }
+    }
+  }
 
-  /** The swap itself, factored for any merge discipline (last-write-wins
-    * upsert here, the SCD2 interval merge in [[graft.ops.Scd2]]):
-    * `mergeFn` receives the live table (None on first write) and
+  /** The bucket of a first-key value, computed on the driver: the value
+    * of [[bucket]] over the same value as a literal.
+    */
+  def bucketOf(firstKey: Any): Int =
+    Math.floorMod(new Murmur3Hash(Seq(Literal(firstKey))).eval().asInstanceOf[Int], Buckets)
+
+  private def bucketDir(table: Path, k: Int) = new Path(table, s"$BucketCol=$k")
+
+  /** A bucket's hidden tmp or old copy, inside the table. */
+  private def hidden(live: Path, suffix: String) =
+    new Path(live.getParent, s".${live.getName}.$suffix")
+
+  /** Replace a flat parquet directory with a rename swap: write the
+    * replacement to `<dir>__tmp`, rename the live copy aside to
+    * `<dir>__old`, rename tmp in, then drop the old copy — the same
+    * commit-by-rename idea as the reference's atomic artifact writer
+    * (grocery_lib/io_utils.py:66-73). Factored for any merge discipline
+    * (the SCD2 interval merge in [[graft.ops.Scd2]], the streaming
+    * sinks): `mergeFn` receives the live table (None on first write) and
     * returns the replacement.
     */
   def replaceParquet(spark: SparkSession, dir: String)
       (mergeFn: Option[DataFrame] => DataFrame): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new Path(dir)
-    val tmp = new Path(dir + "__tmp")
-    val old = new Path(dir + "__old")
-    // crash recovery: a previous run that died between its two renames
-    // leaves the live table at __old and no target — restore it FIRST,
-    // or this run would both merge against nothing and delete the only
-    // surviving copy below
-    if (!fs.exists(target) && fs.exists(old) && !fs.rename(old, target))
-      throw new RuntimeException(s"recovery failed: $old -> $target")
-    val merged = mergeFn(
-      if (fs.exists(target)) Some(spark.read.parquet(dir)) else None)
-    try merged.write.mode("overwrite").parquet(tmp.toString)
+    recover(fs, new Path(dir), new Path(dir + "__tmp"), new Path(dir + "__old"))
+    replaceTable(spark, fs, dir, bucketed = false)(mergeFn)
+  }
+
+  /** The whole-table swap. A `bucketed` replacement carries [[BucketCol]]
+    * and is written partitioned by it. A partitioned write of no rows
+    * leaves no data file, so the table's schema would be lost and every
+    * later read would fail; an empty replacement therefore gets one
+    * schema-only file in bucket 0.
+    */
+  private def replaceTable(spark: SparkSession, fs: FileSystem, dir: String,
+      bucketed: Boolean)(mergeFn: Option[DataFrame] => DataFrame): Unit = {
+    val table = new Path(dir)
+    swapIn(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old")) { tmp =>
+      val out = mergeFn(if (fs.exists(table)) Some(spark.read.parquet(dir)) else None)
+      if (!bucketed) out.write.mode("overwrite").parquet(tmp.toString)
+      else {
+        out.write.partitionBy(BucketCol).mode("overwrite").parquet(tmp.toString)
+        if (!fs.listStatus(tmp).exists(_.getPath.getName.startsWith(BucketCol + "=")))
+          spark.createDataFrame(java.util.List.of[Row](),
+              StructType(out.schema.filterNot(_.name == BucketCol)))
+            .write.parquet(bucketDir(tmp, 0).toString)
+      }
+    }
+  }
+
+  /** Crash recovery for one swap: a swap that died between its two
+    * renames leaves the live copy at `old` and none at `live`. Restore it
+    * FIRST, or the next swap would both merge against nothing and delete
+    * the only surviving copy; then delete whatever tmp or old copy is left.
+    */
+  private def recover(fs: FileSystem, live: Path, tmp: Path, old: Path): Unit = {
+    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
+      throw new RuntimeException(s"recovery failed: $old -> $live")
+    Seq(tmp, old).foreach(p => if (fs.exists(p)) fs.delete(p, true))
+  }
+
+  /** The one commit protocol, run after [[recover]]: `write(tmp)`,
+    * rename `live` aside to `old`, rename `tmp` to `live`, drop `old`. A
+    * failed write deletes its tmp; a crash between the renames leaves
+    * `old` for the next [[recover]].
+    */
+  private def swapIn(fs: FileSystem, live: Path, tmp: Path, old: Path)
+      (write: Path => Unit): Unit = {
+    try write(tmp)
     catch {
       case e: Throwable =>
         if (fs.exists(tmp)) fs.delete(tmp, true)
         throw e
     }
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadTarget = fs.exists(target)
-    if (hadTarget && !fs.rename(target, old))
-      throw new RuntimeException(s"swap failed: $target -> $old")
-    if (!fs.rename(tmp, target)) {
-      // restore the previous table before surfacing the failure
-      if (hadTarget) fs.rename(old, target)
-      throw new RuntimeException(s"swap failed: $tmp -> $target")
+    val hadLive = fs.exists(live)
+    if (hadLive && !fs.rename(live, old))
+      throw new RuntimeException(s"swap failed: $live -> $old")
+    if (!fs.rename(tmp, live)) {
+      // restore the previous copy before surfacing the failure
+      if (hadLive) fs.rename(old, live)
+      throw new RuntimeException(s"swap failed: $tmp -> $live")
     }
-    if (hadTarget) fs.delete(old, true)
+    if (hadLive) fs.delete(old, true)
   }
 }

@@ -280,8 +280,9 @@ object Streaming {
         val corpus = spark.read.parquet(codeTableDir)
         val topk = graft.ann.Ann.bruteForceTopK(corpus, qCodes, idCol, "qv", k)
           .withColumn("served_batch", lit(batchId))
+        // a batch spans many query ids: a flat table, merged whole
         graft.etl.Upsert.upsertParquet(spark, outDir, topk,
-          keys = Seq("query_id", "rank"), versionCol = "served_batch")
+          keys = Seq("query_id", "rank"), versionCol = "served_batch", bucketed = false)
       }
 
   /** Streaming VECTOR INGEST — the growing-corpus half of the quantized
@@ -763,8 +764,9 @@ object Streaming {
         val flagged = graft.ops.AnomalyGate
           .gate(batch0.dropDuplicates("event_id"), moments, threshold)
           .withColumn("served_batch", lit(batchId))
+        // a batch spans many event ids: a flat table, merged whole
         graft.etl.Upsert.upsertParquet(spark, outDir, flagged,
-          keys = Seq("event_id"), versionCol = "served_batch")
+          keys = Seq("event_id"), versionCol = "served_batch", bucketed = false)
       }
 
   /** Streaming DELETION-REQUEST feed (the CDC shape of

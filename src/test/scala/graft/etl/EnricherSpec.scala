@@ -31,10 +31,28 @@ class EnricherSpec extends AnyFunSuite with SparkSpec {
     assert(byId("t4").getAs[String]("category") == "beverages")
   }
 
-  test("enrich uses broadcast joins (dims must never shuffle the fact side)") {
-    val plan = Enricher.enrich(spark, txns).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("SortMergeJoin"), plan)
+  test("enrich by lookup: no join or exchange, one Spark job per enrich stage") {
+    val unknown = txns.union(Seq(
+      (ts("2024-03-05 12:00:00"), "t5", "LAX-404", "SKU-APPLE", 1, 199, "cash", null: String),
+      (ts("2024-03-05 12:00:00"), "t6", "SFO-001", "SKU-NONE", 1, 199, "cash", null: String)
+    ).toDF(txns.columns.toSeq: _*))
+    val fct = Enricher.enrich(spark, unknown)
+    val plan = fct.queryExecution.executedPlan
+    assert(plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.isEmpty, plan)
+    assert(plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty, plan)
+    // inner-join semantics: an unknown store or sku drops out
+    assert(fct.collect().map(_.getAs[String]("txn_id")).sorted.toSeq == Seq("t1", "t2", "t3", "t4"))
+
+    val sc = spark.sparkContext
+    def jobsIn(group: String)(f: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val paths = RunPaths(java.nio.file.Files.createTempDirectory("enrich-jobs").toString, "run-jobs")
+    GroceryPipeline.ingest(spark, paths, "ok")
+    GroceryPipeline.validate(spark, paths)
+    assert(jobsIn("enrich-stage")(GroceryPipeline.enrich(spark, paths)) == 1)
   }
 
   test("daily mart golden values") {

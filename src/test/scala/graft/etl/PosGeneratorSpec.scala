@@ -74,6 +74,14 @@ class PosGeneratorSpec extends AnyFunSuite with SparkSpec {
     assert(Files.size(Paths.get(paths.rawFile)) > 0)
   }
 
+  test("envelope escapes run_id: quotes and backslashes round-trip") {
+    val runId = "run\"q\\x"
+    val body = PosGenerator.envelopeJson(runId, "ok", 3)
+    assert(ContractValidator.parseEnvelope(body).size == 3)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(body).get("run_id").asText == runId)
+  }
+
   test("schema_drift mutates exactly record 0: unit_price_cents → unit_price") {
     val body = PosGenerator.envelopeJson("run-d", "schema_drift", 40)
     val raw = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -4,6 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.functions.lit
+
 import graft.testkit.SparkSpec
 
 class UpsertSpec extends AnyFunSuite with SparkSpec {
@@ -18,6 +20,10 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
   ).toDF("run_id", "txn_id", "revenue_cents", "v")
 
   private val keys = Seq("run_id", "txn_id")
+
+  /** The table's rows without its bucket column. */
+  private def read(dir: String): Set[(String, String, Long, Long)] =
+    spark.read.parquet(dir).drop(Upsert.BucketCol).as[(String, String, Long, Long)].collect().toSet
 
   test("merge: updates win on conflicting keys, inserts otherwise") {
     val out = Upsert.merge(base, updates, keys, "v")
@@ -63,12 +69,12 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     Upsert.upsertParquet(spark, dir, base, keys, "v")
     assert(spark.read.parquet(dir).count() == 3)
     Upsert.upsertParquet(spark, dir, updates, keys, "v")
-    val after = spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet
+    val after = read(dir)
     assert(after == Set(
       ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
       ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
     Upsert.upsertParquet(spark, dir, updates, keys, "v") // idempotent re-apply
-    val again = spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet
+    val again = read(dir)
     assert(again == after)
   }
 
@@ -84,7 +90,7 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     // the next upsert must restore the history and merge against it —
     // NOT treat the table as empty and delete the only surviving copy
     Upsert.upsertParquet(spark, dir, updates, keys, "v")
-    val after = spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet
+    val after = read(dir)
     assert(after == Set(
       ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
       ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
@@ -102,19 +108,20 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
       ("r1", "t2", 200L, 1L)).toDF("run_id", "txn_id", "revenue_cents", "v")
     Upsert.upsertParquet(spark, dir, first, keys, "v")
     val expected = Set(("r1", "t1", 111L, 3L), ("r1", "t2", 200L, 1L))
-    assert(spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet == expected)
+    assert(read(dir) == expected)
     // the anti-join merge relies on a unique table: nothing resurfaces
     Upsert.upsertParquet(spark, dir, Seq(("r1", "t3", 300L, 1L))
       .toDF("run_id", "txn_id", "revenue_cents", "v"), keys, "v")
-    assert(spark.read.parquet(dir).as[(String, String, Long, Long)].collect().toSet ==
-      expected + (("r1", "t3", 300L, 1L)))
+    assert(read(dir) == expected + (("r1", "t3", 300L, 1L)))
   }
 
   test("30 small upserts keep the file count bounded and the column order") {
     val dir = Files.createTempDirectory("upsert").toString + "/fct"
     Upsert.upsertParquet(spark, dir, base, keys, "v")
-    def files = new java.io.File(dir).list().count(_.endsWith(".parquet"))
-    val initial = files
+    def files(suffix: String) = new java.io.File(dir).list().count(_.endsWith(suffix))
+    def perBucket = new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket="))
+      .map(b => b.getName -> b.list().count(_.endsWith(".parquet"))).toMap
+    assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1), perBucket)
     var model = base.as[(String, String, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r).toMap
     (1 to 30).foreach { i =>
@@ -123,10 +130,176 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
       Upsert.upsertParquet(spark, dir,
         batch.toDF("run_id", "txn_id", "revenue_cents", "v"), keys, "v")
       model ++= batch.map(r => (r._1, r._2) -> r)
-      assert(files <= initial.max(2), s"upsert $i: $files parquet files (started with $initial)")
+      assert(files(".parquet") == 0, s"upsert $i: parquet files at the table root")
+      assert(perBucket.size <= Upsert.Buckets && perBucket.values.forall(_ == 1),
+        s"upsert $i: parquet files per bucket $perBucket")
     }
     val table = spark.read.parquet(dir)
-    assert(table.columns.toSeq == base.columns.toSeq)
-    assert(table.as[(String, String, Long, Long)].collect().toSet == model.values.toSet)
+    assert(table.columns.toSeq == base.columns.toSeq :+ Upsert.BucketCol)
+    assert(read(dir) == model.values.toSet)
+  }
+
+  private def bucketOf(runId: String): Int = Upsert.bucketOf(runId)
+
+  /** Each bucket directory's parquet files: name → size. */
+  private def bucketFiles(dir: String): Map[String, Map[String, Long]] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("__bucket=")).map { b =>
+      b.getName -> b.listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.length()).toMap
+    }.toMap
+
+  private def runs(ids: Seq[String], v: Long) =
+    ids.flatMap(r => (1 to 3).map(t => (r, s"t$t", t * 10L, v)))
+      .toDF("run_id", "txn_id", "revenue_cents", "v")
+
+  test("a one-run upsert rewrites its bucket only: every other bucket's files are unchanged") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val ids = (0 until 40).map(i => s"run-$i")
+    Upsert.upsertParquet(spark, dir, runs(ids, 1), keys, "v")
+    val before = bucketFiles(dir)
+    assert(before.size > 8, before.keySet)
+    val batch = Seq(("run-7", "t2", 999L, 2L), ("run-7", "t9", 5L, 2L))
+      .toDF("run_id", "txn_id", "revenue_cents", "v")
+    Upsert.upsertParquet(spark, dir, batch, keys, "v", firstKey = Some("run-7"))
+    val after = bucketFiles(dir)
+    val mine = s"__bucket=${bucketOf("run-7")}"
+    assert(after - mine == before - mine)
+    assert(after(mine).keySet != before(mine).keySet, "the run's bucket was not rewritten")
+    assert(new java.io.File(dir).list().forall(!_.startsWith(s".${Upsert.BucketCol}=")))
+    assert(read(dir) == runs(ids, 1).as[(String, String, Long, Long)].collect().toSet
+      - (("run-7", "t2", 20L, 1L)) + (("run-7", "t2", 999L, 2L)) + (("run-7", "t9", 5L, 2L)))
+  }
+
+  test("a batch over several buckets, or with no first key named, takes the whole-table path") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val ids = (0 until 40).map(i => s"run-$i")
+    Upsert.upsertParquet(spark, dir, runs(ids, 1), keys, "v")
+    val two = ids.map(r => r -> bucketOf(r)).groupBy(_._2).values.map(_.head._1).take(2).toSeq
+    def rewritesEveryBucket(batch: org.apache.spark.sql.DataFrame): Unit = {
+      val before = bucketFiles(dir)
+      Upsert.upsertParquet(spark, dir, batch, keys, "v")
+      val after = bucketFiles(dir)
+      // every bucket is rewritten, the untouched ones included
+      assert(after.keySet == before.keySet)
+      after.foreach { case (b, fs) => assert(fs.keySet != before(b).keySet, b) }
+    }
+    rewritesEveryBucket(runs(two, 2))
+    rewritesEveryBucket(runs(two.take(1), 3))
+    assert(read(dir) == runs(ids, 1).as[(String, String, Long, Long)].collect().toSet
+      .filterNot(r => two.contains(r._1)) ++
+      runs(two.tail, 2).as[(String, String, Long, Long)].collect().toSet ++
+      runs(two.take(1), 3).as[(String, String, Long, Long)].collect().toSet)
+  }
+
+  test("a row outside the named first key's bucket fails the upsert and changes nothing") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val ids = (0 until 40).map(i => s"run-$i")
+    Upsert.upsertParquet(spark, dir, runs(ids, 1), keys, "v")
+    val before = bucketFiles(dir)
+    val other = ids.find(r => bucketOf(r) != bucketOf("run-7")).get
+    val e = intercept[Exception] {
+      Upsert.upsertParquet(spark, dir, runs(Seq("run-7", other), 2), keys, "v",
+        firstKey = Some("run-7"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("outside its bucket")), e)
+    assert(bucketFiles(dir) == before)
+    assert(new java.io.File(dir).list().forall(!_.startsWith(s".${Upsert.BucketCol}=")))
+    assert(read(dir) == runs(ids, 1).as[(String, String, Long, Long)].collect().toSet)
+  }
+
+  test("bucketOf on the driver equals the bucket Spark computes") {
+    val values: Seq[Any] = Seq("run-0", "run-7", "", "run\"q", 0, 17, -5, 3L, Long.MinValue, null)
+    values.foreach { v =>
+      assert(Upsert.bucketOf(v) ==
+        spark.range(1).select(Upsert.bucket(lit(v))).head().getInt(0), s"value $v")
+    }
+    // the column's type, not the value's text, decides the hash
+    assert(Seq(("7", 7, 7L)).toDF("s", "i", "l")
+      .select(Upsert.bucket($"s"), Upsert.bucket($"i"), Upsert.bucket($"l")).head().toSeq ==
+      Seq(Upsert.bucketOf("7"), Upsert.bucketOf(7), Upsert.bucketOf(7L)))
+  }
+
+  test("an empty first batch leaves an empty readable table; later upserts merge into it") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    Upsert.upsertParquet(spark, dir, base.limit(0), keys, "v")
+    val empty = spark.read.parquet(dir)
+    assert(empty.columns.toSeq == base.columns.toSeq :+ Upsert.BucketCol)
+    assert(empty.count() == 0)
+    // an empty batch into a new bucket, then rows into it, then rows
+    // over several buckets
+    Upsert.upsertParquet(spark, dir, base.limit(0), keys, "v", firstKey = Some("r1"))
+    assert(spark.read.parquet(dir).count() == 0)
+    Upsert.upsertParquet(spark, dir, base, keys, "v", firstKey = Some("r1"))
+    assert(read(dir) == base.as[(String, String, Long, Long)].collect().toSet)
+    val r2 = Seq(("r2", "t1", 7L, 1L)).toDF("run_id", "txn_id", "revenue_cents", "v")
+    Upsert.upsertParquet(spark, dir, updates.unionByName(r2), keys, "v")
+    assert(read(dir) == Set(
+      ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
+      ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L), ("r2", "t1", 7L, 1L)))
+  }
+
+  test("a batch into a bucket that does not exist yet keeps the table's columns and types") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    Upsert.upsertParquet(spark, dir, base, keys, "v", firstKey = Some("r1"))
+    val other = (0 until 40).map(i => s"run-$i").find(r => bucketOf(r) != bucketOf("r1")).get
+    // an int version widens to the table's long, as on the other paths
+    val narrow = Seq((other, "t1", 5L, 9)).toDF("run_id", "txn_id", "revenue_cents", "v")
+    Upsert.upsertParquet(spark, dir, narrow, keys, "v", firstKey = Some(other))
+    assert(spark.read.parquet(dir).schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(read(dir) == base.as[(String, String, Long, Long)].collect().toSet + ((other, "t1", 5L, 9L)))
+    // a column the table lacks is refused, not dropped
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Upsert.upsertParquet(spark, dir, narrow.withColumn("extra", lit(1)), keys, "v",
+        firstKey = Some(other))
+    }
+  }
+
+  test("bucketed = false keeps a table flat, and flattens a bucketed one") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    def flat = new java.io.File(dir).list().forall(!_.startsWith(Upsert.BucketCol))
+    Upsert.upsertParquet(spark, dir, base.limit(0), keys, "v", bucketed = false)
+    assert(flat && spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
+    assert(spark.read.parquet(dir).count() == 0)
+    Upsert.upsertParquet(spark, dir, base, keys, "v", bucketed = false)
+    Upsert.upsertParquet(spark, dir, updates, keys, "v", bucketed = false)
+    val merged = Set(("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
+      ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L))
+    assert(flat && spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
+    assert(read(dir) == merged)
+    Upsert.upsertParquet(spark, dir, updates, keys, "v")
+    assert(!flat && bucketFiles(dir).nonEmpty && read(dir) == merged)
+    Upsert.upsertParquet(spark, dir, updates, keys, "v", bucketed = false)
+    assert(flat && read(dir) == merged)
+    intercept[IllegalArgumentException] {
+      Upsert.upsertParquet(spark, dir, updates, keys, "v", firstKey = Some("r1"), bucketed = false)
+    }
+  }
+
+  test("a flat table written by the old layout converts on its first upsert") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    base.write.parquet(dir)
+    assert(spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
+    Upsert.upsertParquet(spark, dir, updates, keys, "v")
+    assert(new java.io.File(dir).list().count(_.endsWith(".parquet")) == 0)
+    assert(bucketFiles(dir).keySet == Set(s"__bucket=${bucketOf("r1")}"))
+    assert(spark.read.parquet(dir).columns.toSeq == base.columns.toSeq :+ Upsert.BucketCol)
+    assert(read(dir) == Set(
+      ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
+      ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
+  }
+
+  test("a user column named __bucket is refused, in the batch or in a flat table") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val e = intercept[IllegalArgumentException] {
+      Upsert.upsertParquet(spark, dir, updates.withColumn(Upsert.BucketCol, lit(3)), keys, "v")
+    }
+    assert(e.getMessage.contains(Upsert.BucketCol))
+    assert(!new java.io.File(dir).exists())
+    base.withColumn(Upsert.BucketCol, lit(3)).write.parquet(dir)
+    intercept[IllegalArgumentException] {
+      Upsert.upsertParquet(spark, dir, updates, keys, "v")
+    }
+    assert(spark.read.parquet(dir).count() == 3)
   }
 }
