@@ -43,9 +43,12 @@ object Checks {
     CheckResult(s"non_empty:$name", !empty, if (empty) "0 rows" else "has rows")
   }
 
-  /** Row-count canary vs minimum threshold. */
+  /** Row-count canary vs minimum threshold. The rows are counted as they
+    * stream out of the plan: one Spark job, where `df.count()` adds an
+    * aggregate exchange and, under adaptive execution, a second job.
+    */
   def countCanary(df: DataFrame, name: String, minRows: Long): CheckResult = {
-    val n = df.count()
+    val n = df.queryExecution.toRdd.count()
     CheckResult(s"canary:$name", n >= minRows, s"count=$n min=$minRows")
   }
 

@@ -3,10 +3,12 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.Json
 import graft.sources.HttpFetch.HttpStatusError
@@ -22,6 +24,8 @@ final case class RunPaths(base: String, runId: String) {
   val rawFile: String = s"$raw/transactions.json"
   val stagedFile: String = s"$staged/transactions.ndjson"
   val enrichedDir: String = s"$out/enriched"
+  /** The enriched artifact: one NDJSON file inside [[enrichedDir]]. */
+  val enrichedFile: String = s"$enrichedDir/transactions.ndjson"
   val enrichedDocFile: String = s"$out/enriched.json"
   val reconcileFile: String = s"$out/reconcile.json"
   def mkdirs(): Unit =
@@ -61,8 +65,9 @@ object Retry {
 
 /** Failure-event sink (reference: grocery_lib/notify_ardoa.py:31-70 —
   * POST a UniversalFailureEvent JSON on task failure; never throws).
-  * Re-expressed as a local JSON event file per failure; the transport is
-  * pluggable, the event shape is the operator.
+  * Re-expressed as a local JSON event file per failure, committed with
+  * tmp+rename; the transport is pluggable, the event shape is the
+  * operator.
   */
 object FailureNotifier {
   def notify(base: String, pipelineId: String, runId: String, taskId: String,
@@ -77,7 +82,7 @@ object FailureNotifier {
           s""" "try_number": $tryNumber,""" +
           s""" "exception_class": ${Json.str(e.getClass.getName)},""" +
           s""" "exception": ${Json.str(Option(e.getMessage).getOrElse(""))}}"""
-      Files.write(dir.resolve(s"$eventId.json"), json.getBytes(StandardCharsets.UTF_8))
+      GroceryPipeline.commitFile(dir.resolve(s"$eventId.json").toString, json)
     } catch { case _: Throwable => () } // never mask the original failure
   }
 }
@@ -148,7 +153,7 @@ object GroceryPipeline {
   /** Atomic tmp+rename file commit (io_utils.py:66-73): a reader sees the
     * previous file or the whole new one, never a torn write.
     */
-  private def commitFile(target: String, body: String): Unit = {
+  private[etl] def commitFile(target: String, body: String): Unit = {
     val tmp = Paths.get(target + ".tmp")
     Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(target), StandardCopyOption.ATOMIC_MOVE,
@@ -173,20 +178,26 @@ object GroceryPipeline {
   /** Stage 3 — enrich: staged NDJSON → dim lookups + revenue → enriched
     * artifact (the reference's declared-but-unwritten fct_sales load,
     * SURVEY.md §2.5 J1). schema_drift surfaces here as a missing
-    * unit_price_cents → revenue_cents null → hard error. One write job:
-    * the row and null-revenue counts ride along via `observe`, and a
-    * failing artifact is deleted before the error is raised, so `load`'s
-    * artifact check still stops the run.
+    * unit_price_cents → revenue_cents null → hard error.
+    *
+    * A run is a few dozen rows, so the stage runs on the driver and starts
+    * no Spark job: the staged lines become a local relation, the one
+    * [[Enricher.enrich]] plan runs over it, and Spark's optimizer
+    * evaluates that plan while planning it (`ConvertToLocalRelation`). A
+    * null revenue raises before anything is written, and an artifact
+    * left by an earlier attempt is deleted, so `load`'s artifact check
+    * still stops the run. The artifact is NDJSON, one `to_json` line per
+    * row in staged order, committed with tmp+rename as [[RunPaths.enrichedFile]].
     */
   def enrich(spark: SparkSession, paths: RunPaths): Long = {
     Checks.requireArtifacts(spark, Seq(paths.stagedFile), paths.runId)
-    val counts = Observation()
-    enrichPlan(spark.read.schema(stagedSchema).json(paths.stagedFile), paths.runId)
-      .observe(counts, count(lit(1)).as("rows"),
-        count_if(col("revenue_cents").isNull).as("null_revenue"))
-      .write.mode("overwrite").parquet(paths.enrichedDir)
-    val observed = counts.get
-    val nullRevenue = observed("null_revenue").asInstanceOf[Long]
+    val enriched = enrichPlan(fromNdjson(spark, readLines(paths.stagedFile), stagedSchema),
+      paths.runId)
+    val rows = enriched
+      .select(to_json(struct(enriched.columns.map(col): _*), jsonOptions),
+        col("revenue_cents").isNull)
+      .collect()
+    val nullRevenue = rows.count(_.getBoolean(1)).toLong
     if (nullRevenue > 0) {
       val out = new org.apache.hadoop.fs.Path(paths.enrichedDir)
       out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
@@ -194,10 +205,17 @@ object GroceryPipeline {
         Seq(s"$$.transactions[*].unit_price_cents: $nullRevenue record(s) cannot derive revenue_cents"),
         nullRevenue)
     }
-    observed("rows").asInstanceOf[Long]
+    Files.createDirectories(Paths.get(paths.enrichedDir))
+    commitFile(paths.enrichedFile, rows.map(_.getString(0) + "\n").mkString)
+    rows.length.toLong
   }
 
   private val stagedSchema = ContractValidator.txnSchema.add("run_id", "string")
+
+  /** The JSON options of the enriched artifact, both ways: timestamps
+    * keep their microseconds (Spark's default writes milliseconds).
+    */
+  private val jsonOptions = Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
 
   /** Staged rows → the enriched artifact's rows under `runId`. */
   private def enrichPlan(staged: DataFrame, runId: String): DataFrame =
@@ -205,68 +223,84 @@ object GroceryPipeline {
         staged.withColumn("event_time", to_timestamp(col("event_time"))))
       .withColumn("run_id", lit(runId))
 
+  /** The non-empty lines of a UTF-8 file, read on the driver. */
+  private def readLines(file: String): Seq[String] =
+    Files.readAllLines(Paths.get(file), StandardCharsets.UTF_8).asScala.toSeq.filter(_.nonEmpty)
+
+  /** NDJSON lines as rows of `schema`: a local relation parsed by Spark's
+    * JSON reader, which fails on any malformed line.
+    */
+  private def fromNdjson(spark: SparkSession, lines: Seq[String], schema: StructType): DataFrame =
+    spark.createDataset(lines)(Encoders.STRING)
+      .select(from_json(col("value"), schema, jsonOptions + ("mode" -> "FAILFAST")).as("r"))
+      .select("r.*")
+
+  /** The batch `load` commits: the enriched artifact's rows, in the enrich
+    * plan's schema, as a local relation.
+    */
+  private[etl] def enrichedBatch(spark: SparkSession, paths: RunPaths): DataFrame = {
+    // the enrich plan analysed over no rows: analysis runs no job
+    val schema = enrichPlan(spark.createDataFrame(
+      java.util.List.of[Row](), stagedSchema), paths.runId).schema
+    fromNdjson(spark, readLines(paths.enrichedFile), schema)
+  }
+
   /** Stage 3b — K4, the reference's enriched SINGLE-DOC envelope
     * (`{"run_id", "scenario", "enriched": [...]}` —
     * grocery_enrich_dag.py:47-52), written with the atomic commit
-    * protocol. `collect_list(struct(*))` folds the run's rows into one
-    * document — correct for the reference's per-run batch shape; the
-    * parquet artifact from [[enrich]] remains the scale path. Returns
-    * the row count inside the envelope.
+    * protocol. The artifact's lines are already JSON objects, so the
+    * document is built from them on the driver, with no Spark job.
+    * Returns the row count inside the envelope.
     */
   def writeEnrichedEnvelope(spark: SparkSession, paths: RunPaths,
       scenario: String): Long = {
-    Checks.requireArtifacts(spark, Seq(paths.enrichedDir), paths.runId)
-    val enriched = spark.read.parquet(paths.enrichedDir)
-    val row = enriched
-      .agg(collect_list(struct(enriched.columns.map(col): _*)).as("enriched"))
-      .select(
-        to_json(struct(
-          lit(paths.runId).as("run_id"),
-          lit(scenario).as("scenario"),
-          col("enriched"))).as("doc"),
-        size(col("enriched")).cast("long").as("n"))
-      .head()
-    commitFile(paths.enrichedDocFile, row.getString(0))
-    row.getLong(1)
+    Checks.requireArtifacts(spark, Seq(paths.enrichedFile), paths.runId)
+    val lines = readLines(paths.enrichedFile)
+    commitFile(paths.enrichedDocFile,
+      s"""{"run_id":${Json.str(paths.runId)},"scenario":${Json.str(scenario)},""" +
+        lines.mkString(""""enriched":[""", ",", "]}"))
+    lines.size.toLong
   }
 
   /** Stage 4 — load: keyed upsert into the warehouse fact directory
     * (grocery_lib/pg.py:33-60 ON CONFLICT semantics, set-based). Every
     * row carries the run's id, so the upsert rewrites that run_id's
-    * bucket only.
+    * bucket only. The artifact is read on the driver, and the upsert
+    * takes its batch there ([[Upsert.upsertParquet]]): the bucket write is
+    * the stage's one Spark job. Two records with one txn_id: the later
+    * one in wire order wins, as in the reference's row-by-row upsert.
     */
   def load(spark: SparkSession, paths: RunPaths, warehouseDir: String): Unit = {
-    Checks.requireArtifacts(spark, Seq(paths.enrichedDir), paths.runId)
-    // inserted_at default NOW() (init.sql:29) — orders batches for
-    // last-write-wins within the same key
-    // the artifact's schema is the enrich plan's, analysed over no rows:
-    // a parquet read without a schema runs an inference job
-    val schema = enrichPlan(spark.createDataFrame(
-      java.util.List.of[Row](), stagedSchema), paths.runId).schema
-    val enriched = spark.read.schema(schema).parquet(paths.enrichedDir)
-      .withColumn("inserted_at", current_timestamp())
-    Upsert.upsertParquet(spark, warehouseDir, enriched,
+    Checks.requireArtifacts(spark, Seq(paths.enrichedFile), paths.runId)
+    // inserted_at default NOW() (init.sql:29): one value per load, which
+    // the optimizer folds on the driver
+    Upsert.upsertParquet(spark, warehouseDir,
+      enrichedBatch(spark, paths).withColumn("inserted_at", current_timestamp()),
       keys = Seq("run_id", "txn_id"), versionCol = "inserted_at",
       firstKey = Some(paths.runId))
   }
 
   /** Stage 5 — reconcile: count canary under THIS run's id (fixing the
     * reference's wrong-run_id bug, grocery_reconcile_dag.py:17) and write
-    * the verdict artifact. On a bucketed warehouse the scan prunes to the
-    * run's bucket; a flat one (an older layout) is filtered whole.
+    * the verdict artifact with tmp+rename. On a bucketed warehouse only
+    * the run's bucket is read; a flat one (an older layout) is filtered
+    * whole. The scan reads run_id alone, under a schema stated here, so
+    * the count is the stage's one Spark job.
     */
   def reconcile(spark: SparkSession, paths: RunPaths, warehouseDir: String,
       minRows: Long = 10): CheckResult = {
-    val table = spark.read.parquet(warehouseDir)
-    val ofRun = col("run_id") === paths.runId
-    val mine = table.filter(
-      if (!table.columns.contains(Upsert.BucketCol)) ofRun
-      else col(Upsert.BucketCol) === Upsert.bucketOf(paths.runId) && ofRun)
+    val table = new org.apache.hadoop.fs.Path(warehouseDir)
+    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val scanned = if (Upsert.bucketDirs(fs, table).isEmpty) table
+      else Upsert.bucketDir(table, Upsert.bucketOf(paths.runId))
+    val runIds = StructType(Seq(StructField("run_id", StringType)))
+    val mine =
+      if (!fs.exists(scanned)) spark.createDataFrame(java.util.List.of[Row](), runIds)
+      else spark.read.schema(runIds).parquet(scanned.toString).filter(col("run_id") === paths.runId)
     val result = Checks.countCanary(mine, s"run=${paths.runId}", minRows)
-    val verdict = s"""{"run_id": ${Json.str(paths.runId)}, "pass": ${result.pass},""" +
-      s""" "detail": ${Json.str(result.detail)}}"""
-    Files.write(Paths.get(paths.reconcileFile),
-      verdict.getBytes(StandardCharsets.UTF_8))
+    commitFile(paths.reconcileFile,
+      s"""{"run_id": ${Json.str(paths.runId)}, "pass": ${result.pass},""" +
+        s""" "detail": ${Json.str(result.detail)}}""")
     if (!result.pass) throw new DataQualityError(Seq(result))
     result
   }

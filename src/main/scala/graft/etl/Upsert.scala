@@ -1,20 +1,26 @@
 package graft.etl
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal, Murmur3Hash}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed upsert semantics (reference: grocery_lib/pg.py:33-60 —
   * `INSERT ... ON CONFLICT (run_id, txn_id) DO UPDATE`, executed row-at-a-
   * time; sql/init.sql:47-61 — `ON CONFLICT DO NOTHING` idempotent seeds).
   *
   * The row-at-a-time loop is deliberately NOT ported: the set-based
-  * equivalent deduplicates the batch on the key (only the batch
-  * shuffles), drops the table rows whose key the batch carries with a
-  * broadcast left-anti join, and appends the batch. The merge itself
+  * equivalent deduplicates the batch on the key, drops the table rows
+  * whose key the batch carries, and appends the batch. The merge itself
   * never shuffles the table side. The table holds one row per key; every
   * write path here keeps it that way.
   *
@@ -34,14 +40,21 @@ import org.apache.spark.sql.types.StructType
   *    value's bucket only and swaps `__bucket=k` through the hidden
   *    `.__bucket=k.tmp` and `.__bucket=k.old` inside the table (Spark's
   *    listing skips names that start with `.`), so a 40-row load
-  *    rewrites 1/16 of the table;
+  *    rewrites 1/16 of the table. The batch is one run, so it is taken
+  *    to the driver: its bucket is checked and it is deduplicated there,
+  *    a tie on the version going to the row later in batch order; the
+  *    bucket's rows for its keys drop out by a literal predicate; the
+  *    table's schema comes from one parquet footer. The bucket write is
+  *    the one Spark job;
   *  - any other batch (the first write, a batch with no first-key value
   *    named, a flat table) merges against the whole table and swaps it
-  *    through the siblings `<dir>__tmp` and `<dir>__old`. A bucketed
-  *    table is shuffled by bucket and written partitioned by `__bucket`;
-  *    an empty one is one schema-only file in bucket 0, so it stays
-  *    readable. A flat table is written as it is merged, as
-  *    [[replaceParquet]] writes.
+  *    through the siblings `<dir>__tmp` and `<dir>__old`. It is
+  *    deduplicated by [[latestPerKey]], shuffling only the batch, and its
+  *    keys drop out of the table by a broadcast left-anti join
+  *    ([[merge]]). A bucketed table is shuffled by bucket and written
+  *    partitioned by `__bucket`; an empty one is one schema-only file in
+  *    bucket 0, so it stays readable. A flat table is written as it is
+  *    merged, as [[replaceParquet]] writes.
   *
   * '''Recovery''' runs before every upsert, at both levels, with one
   * rule: first for the table, then for each bucket, an old copy whose
@@ -67,7 +80,9 @@ object Upsert {
   /** The bucket of a first-key value. */
   def bucket(firstKey: Column): Column = pmod(hash(firstKey), lit(Buckets))
 
-  /** One row per key: the greatest `versionCol` wins (ties arbitrary).
+  /** One row per key: the greatest `versionCol` wins; a tie has an
+    * arbitrary winner (the one-bucket path of [[upsertParquet]] breaks it
+    * by batch order instead).
     * The shuffle keeps one partition per core: left to adaptive
     * coalescing, a bulk first batch of a few tens of MB would sort and
     * write in a single task. It hashes on `clusterBy` when given (a
@@ -110,9 +125,10 @@ object Upsert {
     *
     * `firstKey` is the one value of `keys.head` that the caller knows
     * every row of the batch carries (a pipeline run's run_id). With it,
-    * the batch commits into that value's bucket alone; a row in another
-    * bucket fails the write and leaves the table as it was. Without it,
-    * the batch takes the whole-table path, so its plan runs once.
+    * the batch is collected to the driver and commits into that value's
+    * bucket alone; a row in another bucket fails the upsert and leaves the
+    * table as it was. Without it, the batch takes the whole-table path, so
+    * its plan runs once and never passes through the driver.
     *
     * `bucketed = false` keeps the table flat (and flattens a bucketed
     * one): every upsert merges the whole table and writes it without a
@@ -133,21 +149,24 @@ object Upsert {
       val live = bucketDir(table, k)
       recover(fs, live, hidden(live, "tmp"), hidden(live, "old"))
     }
-    val isBucketed = fs.exists(table) &&
-      fs.listStatus(table).exists(_.getPath.getName.startsWith(BucketCol + "="))
+    val buckets = bucketDirs(fs, table)
+    val isBucketed = buckets.nonEmpty
     firstKey.filter(_ => isBucketed) match {
       case Some(value) =>
         val k = bucketOf(value)
         val live = bucketDir(table, k)
-        val schema = StructType(spark.read.parquet(dir).schema.filterNot(_.name == BucketCol))
-        val batch = updates.filter(when(bucket(col(keys.head)) === k, lit(true))
-          .otherwise(raise_error(
-            lit(s"upsert batch for ${keys.head} = $value has a row outside its bucket $k"))))
+        val schema = tableSchema(fs, buckets)
+        val batch = latestOnDriver(updates, keys, versionCol, value, k)
+        // the bucket's rows for the batch's keys, as a literal predicate
+        val batchKeys = batch.map(r => struct(keys.map { c =>
+          lit(r.getAs[Any](c)).cast(updates.schema(c).dataType).as(c)
+        }: _*))
         swapIn(fs, live, hidden(live, "tmp"), hidden(live, "old")) { tmp =>
           val base =
             if (fs.exists(live)) spark.read.schema(schema).parquet(live.toString)
             else spark.createDataFrame(java.util.List.of[Row](), schema)
-          merge(base, batch, keys, versionCol)
+          base.filter(!struct(keys.map(col): _*).isin(batchKeys: _*))
+            .unionByName(spark.createDataFrame(batch.asJava, updates.schema))
             // fold the batch into the bucket's own partitions, so its file
             // count does not grow by the batch's files on every upsert
             .coalesce(base.rdd.getNumPartitions.max(1))
@@ -179,10 +198,68 @@ object Upsert {
   /** The bucket of a first-key value, computed on the driver: the value
     * of [[bucket]] over the same value as a literal.
     */
-  def bucketOf(firstKey: Any): Int =
-    Math.floorMod(new Murmur3Hash(Seq(Literal(firstKey))).eval().asInstanceOf[Int], Buckets)
+  def bucketOf(firstKey: Any): Int = bucketOf(Literal(firstKey))
 
-  private def bucketDir(table: Path, k: Int) = new Path(table, s"$BucketCol=$k")
+  private def bucketOf(value: Literal): Int =
+    Math.floorMod(new Murmur3Hash(Seq(value)).eval().asInstanceOf[Int], Buckets)
+
+  /** The directory of bucket `k` of the table at `table`. */
+  def bucketDir(table: Path, k: Int): Path = new Path(table, s"$BucketCol=$k")
+
+  /** The bucket directories of the table at `table`; none when it is flat
+    * or does not exist.
+    */
+  def bucketDirs(fs: FileSystem, table: Path): Seq[Path] =
+    if (!fs.exists(table)) Nil
+    else fs.listStatus(table).toSeq.map(_.getPath).filter(_.getName.startsWith(BucketCol + "="))
+
+  /** A one-bucket batch, taken to the driver: every row must fall in
+    * bucket `k`, and each key keeps one row, the greatest `versionCol`
+    * with a tie going to the row later in batch order (the last of a
+    * row-at-a-time ON CONFLICT DO UPDATE). Versions compare in Spark's
+    * own ascending order, nulls first.
+    */
+  private def latestOnDriver(updates: DataFrame, keys: Seq[String], versionCol: String,
+      firstKey: Any, k: Int): Seq[Row] = {
+    val schema = updates.schema
+    val first = schema.fieldIndex(keys.head)
+    val firstType = schema(first).dataType
+    val keyAt = keys.map(schema.fieldIndex)
+    val v = schema.fieldIndex(versionCol)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema(v).dataType)
+    val order = InterpretedOrdering.forSchema(Seq(schema(v).dataType))
+    def version(r: Row) = InternalRow(toCatalyst(r.get(v)))
+    val latest = mutable.LinkedHashMap.empty[Seq[Any], Row]
+    updates.collect().foreach { r =>
+      if (bucketOf(Literal.create(r.get(first), firstType)) != k) throw new IllegalArgumentException(
+        s"upsert batch for ${keys.head} = $firstKey has a row outside its bucket $k")
+      val key = keyAt.map(r.get)
+      if (latest.get(key).forall(prev => order.compare(version(prev), version(r)) <= 0))
+        latest(key) = r
+    }
+    latest.values.toSeq
+  }
+
+  /** The table's columns, without [[BucketCol]], from the footer of the
+    * first parquet file found in `buckets`, read on the driver:
+    * `spark.read.parquet(dir).schema` would run an inference job. A file
+    * Spark wrote carries its schema under Spark's row-metadata key; any
+    * other is converted from its parquet schema. The columns are
+    * nullable, as a parquet read gives them.
+    */
+  private def tableSchema(fs: FileSystem, buckets: Seq[Path]): StructType = {
+    val file = buckets.iterator.flatMap(b => fs.listStatus(b).iterator.map(_.getPath))
+      .find(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under ${buckets.mkString(", ")}"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, fs.getConf))
+    val schema = try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
+    } finally reader.close()
+    StructType(schema.map(_.copy(nullable = true)))
+  }
 
   /** A bucket's hidden tmp or old copy, inside the table. */
   private def hidden(live: Path, suffix: String) =

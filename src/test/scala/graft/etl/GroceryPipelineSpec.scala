@@ -128,6 +128,10 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     val verdict = new ObjectMapper().readTree(new java.io.File(paths.reconcileFile))
     assert(verdict.get("run_id").asText == runId)
     assert(verdict.get("pass").asBoolean)
+    // both are committed with tmp+rename: no .tmp left behind
+    Seq(s"$base/failure_events", paths.out).foreach { d =>
+      assert(!new java.io.File(d).list().exists(_.endsWith(".tmp")), d)
+    }
   }
 
   test("partial_write: a concurrent reader inside the race window sees torn JSON") {
@@ -178,6 +182,136 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     GroceryPipeline.load(spark, paths, wh)
     intercept[DataQualityError] {
       GroceryPipeline.reconcile(spark, paths, wh)
+    }
+  }
+
+  /** The Spark jobs `f` starts, counted in a job group of its own. */
+  private def jobsIn(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("Spark jobs per stage: enrich 0, envelope 0, load 1, reconcile 1") {
+    val base = tmp()
+    val wh = s"$base/wh"
+    // a first run creates the bucketed warehouse, so the next load
+    // commits one bucket
+    GroceryPipeline.run(spark, base, wh, "run-first", "ok")
+    val paths = RunPaths(base, "run-jobs")
+    GroceryPipeline.ingest(spark, paths, "ok")
+    GroceryPipeline.validate(spark, paths)
+    assert(jobsIn(s"$base/enrich")(GroceryPipeline.enrich(spark, paths)) == 0)
+    assert(jobsIn(s"$base/envelope")(GroceryPipeline.writeEnrichedEnvelope(spark, paths, "ok")) == 0)
+    assert(jobsIn(s"$base/load")(GroceryPipeline.load(spark, paths, wh)) == 1)
+    assert(jobsIn(s"$base/reconcile")(GroceryPipeline.reconcile(spark, paths, wh)) == 1)
+    assert(spark.read.parquet(wh).filter("run_id = 'run-jobs'").count() == 40)
+  }
+
+  test("one txn_id twice in an envelope: the later record loads, 5 of 5") {
+    val base = tmp()
+    val wh = s"$base/wh"
+    GroceryPipeline.run(spark, base, wh, "run-first", "ok")
+    def record(txn: String, qty: Int) =
+      s"""{"event_time": "2024-03-05T09:00:00.000Z", "txn_id": "$txn", "store_id": "SFO-001",""" +
+        s""" "sku": "SKU-APPLE", "quantity": $qty, "unit_price_cents": 199, "tender_type": "cash"}"""
+    (1 to 5).foreach { i =>
+      val paths = RunPaths(base, s"run-tie$i")
+      paths.mkdirs()
+      // the later record has the smaller quantity in some runs, the
+      // greater in others: order decides, not value
+      val (earlier, later) = if (i % 2 == 0) (5, 1) else (1, 5)
+      val records = (0 until 12).map(t => record(s"t$t", if (t == 3) earlier else 2)) :+
+        record("t3", later)
+      Files.write(Paths.get(paths.rawFile),
+        s"""{"ok": true, "transactions": [${records.mkString(",")}]}""".getBytes("UTF-8"))
+      assert(GroceryPipeline.validate(spark, paths) == 13)
+      assert(GroceryPipeline.enrich(spark, paths) == 13)
+      GroceryPipeline.load(spark, paths, wh)
+      val run = spark.read.parquet(wh).filter(s"run_id = 'run-tie$i'")
+      assert(run.count() == 12)
+      assert(run.filter("txn_id = 't3'").select("quantity").collect().map(_.getLong(0)).toSeq ==
+        Seq(later.toLong), s"run $i")
+    }
+  }
+
+  test("load reads back the DataFrame enrichment, any run_id (ScalaCheck)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, to_timestamp}
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val base = tmp()
+    /** The enrichment over Spark's JSON file reader, a distributed job. The
+      * staged file is copied first: the reader globs its path, and a
+      * run_id may hold glob characters.
+      */
+    def dataFramePath(paths: RunPaths): DataFrame = {
+      val staged = Files.createTempFile(Paths.get(base), "staged", ".ndjson")
+      Files.copy(Paths.get(paths.stagedFile), staged, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Enricher.enrich(spark, spark.read.schema(ContractValidator.txnSchema.add("run_id", "string"))
+          .json(staged.toString).withColumn("event_time", to_timestamp(col("event_time"))))
+        .withColumn("run_id", lit(paths.runId))
+    }
+    def assertRoundTrip(paths: RunPaths, clue: String): Unit = {
+      val batch = GroceryPipeline.enrichedBatch(spark, paths)
+      val expected = dataFramePath(paths)
+      assert(batch.schema.map(f => (f.name, f.dataType)) == expected.schema.map(f => (f.name, f.dataType)), clue)
+      def rows(df: DataFrame) = df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+      val got = rows(batch)
+      assert(got.nonEmpty && got == rows(expected), clue)
+    }
+    // run_ids with quotes, backslashes and non-ASCII text (no '/': a
+    // run_id names a directory)
+    val runIdGen = Gen.nonEmptyListOf(Gen.frequency(
+      8 -> Gen.alphaNumChar.map(_.toString),
+      4 -> Gen.oneOf("\"", "\\", "'", " ", "-", "{", ":", "é", "ß", "中", "\u00a0", "\u2028", "😀")))
+      .map(cs => "run-" + cs.mkString)
+    val seeds = (1L to 12L).map(Seed(_))
+
+    // every scenario's PosGenerator envelope that passes validate and enrich
+    val passed = Scenario.all.zip(seeds ++ seeds).flatMap { case (scenario, seed) =>
+      val runId = runIdGen(Gen.Parameters.default, seed).get + "-" + scenario.name
+      val paths = RunPaths(base, runId)
+      try {
+        GroceryPipeline.ingest(spark, paths, scenario.name, partialPauseMs = 0)
+        GroceryPipeline.validate(spark, paths)
+        GroceryPipeline.enrich(spark, paths)
+        assertRoundTrip(paths, s"$scenario, run_id $runId")
+        Some(scenario)
+      } catch {
+        case _: DataContractError | _: graft.sources.HttpFetch.HttpStatusError => None
+      }
+    }
+    assert(passed.contains(Scenario.Ok) && !passed.contains(Scenario.SchemaDrift) &&
+      !passed.contains(Scenario.MalformedJson), passed)
+
+    // staged rows with microsecond event times, null customer_ids, and
+    // stores or skus that drop out
+    val txnGen = for {
+      micros <- Gen.choose(946684800000000L, 1893456000000000L) // 2000 .. 2030
+      store <- Gen.oneOf(PosGenerator.stores :+ "LAX-404")
+      sku <- Gen.oneOf(PosGenerator.skus)
+      qty <- Gen.choose(1L, 50L)
+      price <- Gen.choose(0L, 100000L)
+      tender <- Gen.oneOf(PosGenerator.tenders)
+      customer <- Gen.option(Gen.identifier)
+    } yield (micros, store, sku, qty, price, tender, customer)
+    seeds.foreach { seed =>
+      val runId = runIdGen(Gen.Parameters.default, seed).get
+      val txns = Gen.listOfN(25, txnGen)(Gen.Parameters.default, seed).get.zipWithIndex.map {
+        case ((micros, store, sku, qty, price, tender, customer), i) =>
+          Map[String, Any]("event_time" ->
+              java.time.Instant.EPOCH.plus(micros, java.time.temporal.ChronoUnit.MICROS).toString,
+            "txn_id" -> s"t$i", "store_id" -> store, "sku" -> sku, "quantity" -> qty,
+            "unit_price_cents" -> price, "tender_type" -> tender) ++ customer.map("customer_id" -> _)
+      }
+      val paths = RunPaths(s"$base/staged", runId)
+      paths.mkdirs()
+      Files.write(Paths.get(paths.stagedFile),
+        ContractValidator.toNdjson(txns, runId).getBytes("UTF-8"))
+      GroceryPipeline.enrich(spark, paths)
+      assertRoundTrip(paths, s"seed $seed, run_id $runId")
     }
   }
 }

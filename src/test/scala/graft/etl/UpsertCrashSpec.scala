@@ -168,6 +168,7 @@ class UpsertCrashSpec extends AnyFunSuite with SparkSpec {
     upsert(after, batch, crashfs = true)
     val calls = CrashingFileSystem.disarm(after.getParent)
     assert(calls > 0, "the clean upsert made no mutating call")
+    info(s"$calls mutating calls, each a crash point")
     val expected = Seq(before, after).map { d =>
       val dir = copyOf(d, s"next-${d.getParent.getFileName}")
       upsert(dir, next)
