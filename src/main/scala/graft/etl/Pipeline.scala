@@ -14,10 +14,12 @@ import graft.Json
 import graft.sources.HttpFetch.HttpStatusError
 
 /** Run-scoped artifact layout (reference: grocery_lib/io_utils.py:38-57 —
-  * `<base>/grocery_runs/<run_id>/{raw,staged,out}`).
+  * `<base>/grocery_runs/<run_id>/{raw,staged,out}`), the run_id written
+  * as [[RunPaths.fileName]].
   */
 final case class RunPaths(base: String, runId: String) {
-  val root: String = s"$base/grocery_runs/$runId"
+  require(runId.nonEmpty, "run_id must not be empty")
+  val root: String = s"$base/grocery_runs/${RunPaths.fileName(runId)}"
   val raw: String = s"$root/raw"
   val staged: String = s"$root/staged"
   val out: String = s"$root/out"
@@ -30,6 +32,20 @@ final case class RunPaths(base: String, runId: String) {
   val reconcileFile: String = s"$out/reconcile.json"
   def mkdirs(): Unit =
     Seq(raw, staged, out).foreach(d => Files.createDirectories(Paths.get(d)))
+}
+
+object RunPaths {
+  private val Safe = (('A' to 'Z') ++ ('a' to 'z') ++ ('0' to '9') ++ "_-").toSet
+
+  /** `id` as one file name that needs no locale and cannot leave its
+    * directory: every character outside `[A-Za-z0-9_-]` (`.` and `%`
+    * included) becomes the `%XX` of its UTF-8 bytes. Distinct ids get
+    * distinct names, and an id such as `run-00001` keeps its own.
+    */
+  def fileName(id: String): String =
+    id.getBytes(StandardCharsets.UTF_8).map { b =>
+      if (Safe(b.toChar)) b.toChar.toString else f"%%${b & 0xff}%02X"
+    }.mkString
 }
 
 /** Retry with fixed backoff (reference: DAG default_args retries —
@@ -53,11 +69,13 @@ object Retry {
   }
 
   /** Failures that may pass on another try: a 5xx from the source, a
-    * timeout, I/O. A contract or data-quality error is deterministic, so
-    * retrying it only sleeps.
+    * timeout, I/O. A contract or data-quality error, or a missing upstream
+    * artifact, is deterministic, so retrying it only sleeps.
     */
   def transient(e: Throwable): Boolean = e match {
     case HttpStatusError(status, _) => status >= 500
+    // a missing file stays missing
+    case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => false
     case _: java.io.IOException => true // includes HttpTimeoutException
     case _ => false
   }
@@ -82,7 +100,8 @@ object FailureNotifier {
           s""" "try_number": $tryNumber,""" +
           s""" "exception_class": ${Json.str(e.getClass.getName)},""" +
           s""" "exception": ${Json.str(Option(e.getMessage).getOrElse(""))}}"""
-      GroceryPipeline.commitFile(dir.resolve(s"$eventId.json").toString, json)
+      GroceryPipeline.commitFile(
+        dir.resolve(s"${RunPaths.fileName(eventId)}.json").toString, json)
     } catch { case _: Throwable => () } // never mask the original failure
   }
 }

@@ -28,7 +28,7 @@ object ValidationDrill {
         s"artifact=$artifactPath")
 
   def artifactPath(base: String, runId: String): String =
-    s"$base/validation_scale_runs/$runId/artifacts/large_payload.json"
+    s"$base/validation_scale_runs/${RunPaths.fileName(runId)}/artifacts/large_payload.json"
 
   /** One fanout task (fanout_task, :20-25): a tiny Spark job, returning
     * the reference's `ok:i` payload over the DAG's XCom channel.

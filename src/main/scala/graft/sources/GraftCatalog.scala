@@ -38,9 +38,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the catalog adds naming, not an execution layer (at 100 TB the scan
   * plan is what matters; it is byte-for-byte the built-in one). The
   * reserved `warehouse` namespace routes to [[WarehouseTable]], so SQL
-  * `INSERT INTO` runs the same key-clustered delete+insert upsert as
-  * `df.write.format("graft-warehouse")` — redelivery-idempotent, per-task
-  * transactions (see [[WarehouseDataSource]]).
+  * `INSERT INTO` runs the same delete+insert upsert as
+  * `df.write.format("graft-warehouse")` — redelivery-idempotent, one
+  * driver-side transaction per statement (see [[WarehouseDataSource]]).
   *
   * Unsupported surface (ALTER/RENAME, nested namespaces, partitioned
   * CREATE) throws rather than half-working; CTAS is non-atomic in the

@@ -1,17 +1,19 @@
 package graft.sources
 
-import java.sql.{DriverManager, ResultSet}
+import java.sql.{Connection, DriverManager, ResultSet}
 import java.util.{Map => JMap}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -31,16 +33,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("url", jdbcUrl).option("dbtable", "fct_sales").load()
   * }}}
   *
-  * Writes: each task opens one connection and stages delete+insert
-  * batches inside a single transaction (portable across dialects
-  * without ON CONFLICT), so a key's final value is the LAST source row —
-  * which makes a REDELIVERED batch converge to the same table state (the
+  * Writes: tasks only copy their rows into their commit messages; the
+  * job's `commit` applies the batch on the driver in ONE transaction —
+  * DELETE of the keys, then INSERT (portable across dialects without ON
+  * CONFLICT). A key ends at its LAST source row by (partition, position),
+  * so a REDELIVERED batch converges to the same table state (the
   * idempotence a retrying orchestrator needs; WarehouseDataSourceSpec
-  * proves it). The connector asks Spark to CLUSTER input by the key
-  * columns ([[RequiresDistributionAndOrdering]]), so one key's rows
-  * never race across connections. Atomicity is per task transaction,
-  * not per job: a failed job leaves committed partitions, and rerunning
-  * the idempotent upsert converges.
+  * proves it). A failed task or statement leaves the table unchanged, and
+  * `commit` sees only successful task attempts. No input distribution is
+  * required: one Spark job, no shuffle. The batch passes through driver
+  * memory, bounded by `spark.driver.maxResultSize` (commit messages are
+  * task results); a write over it fails before `commit`, changing nothing.
   *
   * The read path serves catalog visibility and round-trip testing: one
   * partition, column pruning pushed into the SELECT. Partitioned scale
@@ -93,7 +96,7 @@ private[sources] object WarehouseConf {
 
 private[sources] object WarehouseDataSource {
 
-  /** Rows per DELETE/INSERT statement batch in [[WarehouseWriter]]. */
+  /** Rows per DELETE/INSERT statement batch in [[WarehouseWrite]]. */
   val BatchSize = 1000
 
   private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
@@ -509,7 +512,7 @@ private[sources] class WarehouseReader(conf: WarehouseConf,
 }
 
 private[sources] class WarehouseWrite(schema: StructType, conf: WarehouseConf)
-    extends Write with RequiresDistributionAndOrdering {
+    extends Write {
 
   schema.fieldNames.foreach(
     WarehouseDataSource.requireIdent(_, "column", allowQualified = false))
@@ -523,103 +526,94 @@ private[sources] class WarehouseWrite(schema: StructType, conf: WarehouseConf)
           s"(${schema.fieldNames.mkString(", ")})"))
   })
 
-  /** Cluster same-key rows into one task so upserts of a key never race
-    * across connections (append requests no distribution).
-    */
-  override def requiredDistribution(): Distribution =
-    if (resolved.keys.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      resolved.keys.map(k => Expressions.identity(k): org.apache.spark.sql.connector.expressions.Expression).toArray)
-  override def requiredOrdering(): Array[SortOrder] = Array.empty
-
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new WarehouseWriterFactory(schema, resolved)
-    // per-task transactions already committed; job-level commit is a
-    // no-op (idempotent upsert makes retries converge)
-    override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+      new WarehouseWriterFactory(schema)
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      applyBatch(messages.toSeq.map(_.asInstanceOf[WarehouseRows])
+        .sortBy(_.partition).flatMap(_.rows))
+    // the tasks wrote nothing to the warehouse
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
+
+  /** One transaction over the batch `rows` (in source order): for a keyed
+    * write, the DELETE of the last row per key, then its INSERT, each in
+    * statement batches of [[WarehouseDataSource.BatchSize]]; for an
+    * append, the INSERTs. Any failure rolls the whole batch back.
+    */
+  private def applyBatch(rows: Seq[InternalRow]): Unit = {
+    val types = schema.fields.map(f => WarehouseDataSource.jdbcType(f.dataType))
+    val vals = rows.map(r => schema.fields.indices.map(i =>
+      WarehouseDataSource.fromInternal(r, i, schema(i).dataType)).toArray)
+    val keyIdx = resolved.keys.map(schema.fieldIndex).toArray
+    val kept =
+      if (keyIdx.isEmpty) vals
+      else {
+        // value-comparable key: Array[Byte] (BinaryType) has identity
+        // equals/hashCode, so two equal binary keys would both survive
+        val last = mutable.LinkedHashMap.empty[Seq[Any], Array[Any]]
+        vals.foreach { v =>
+          last(keyIdx.toSeq.map(v(_) match {
+            case b: Array[Byte] => b.toSeq
+            case x => x
+          })) = v
+        }
+        last.values.toSeq
+      }
+    val cols = schema.fieldNames
+    val conn = DriverManager.getConnection(resolved.url)
+    try {
+      conn.setAutoCommit(false)
+      try {
+        if (keyIdx.nonEmpty)
+          execute(conn, s"DELETE FROM ${resolved.table} WHERE " +
+            resolved.keys.map(k => s"$k = ?").mkString(" AND "),
+            kept.map(v => keyIdx.map(v(_))), keyIdx.map(types(_)))
+        execute(conn, s"INSERT INTO ${resolved.table} (${cols.mkString(", ")}) " +
+          s"VALUES (${cols.map(_ => "?").mkString(", ")})", kept, types)
+        conn.commit()
+      } catch {
+        case e: Throwable =>
+          conn.rollback()
+          throw e
+      }
+    } finally conn.close()
+  }
+
+  private def execute(conn: Connection, sql: String, rows: Seq[Array[Any]],
+      types: Array[Int]): Unit = {
+    val ps = conn.prepareStatement(sql)
+    try rows.grouped(WarehouseDataSource.BatchSize).foreach { chunk =>
+      chunk.foreach { v =>
+        v.indices.foreach(i => WarehouseDataSource.bind(ps, i + 1, v(i), types(i)))
+        ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally ps.close()
+  }
 }
 
-private[sources] class WarehouseWriterFactory(schema: StructType,
-    conf: WarehouseConf) extends DataWriterFactory {
+/** One task's rows, in the order it read them. */
+private[sources] final case class WarehouseRows(partition: Int, rows: Array[InternalRow])
+    extends WriterCommitMessage
+
+private[sources] class WarehouseWriterFactory(schema: StructType) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarehouseWriter(schema, conf)
+    new WarehouseWriter(partitionId, schema)
 }
 
-/** One connection + one transaction per task: delete(keys)+insert
-  * batches staged through PreparedStatements, committed at task commit.
-  * Two same-key rows in one staged batch would both survive the single
-  * delete — the writer flushes the pending batch when a key repeats, so
-  * the later row's delete lands AFTER the earlier insert (last-write-
-  * wins in source order, matching Upsert.merge).
+/** Copies its partition's rows (an `UnsafeRow` serializes as its bytes)
+  * and hands them to the job commit of [[WarehouseWrite]]; it opens no
+  * connection.
   */
-private[sources] class WarehouseWriter(schema: StructType, conf: WarehouseConf)
+private[sources] class WarehouseWriter(partition: Int, schema: StructType)
     extends DataWriter[InternalRow] {
 
-  private val cols = schema.fieldNames
-  private val keyIdx = conf.keys.map(schema.fieldIndex)
-  private val sqlTypes = schema.fields.map(f => WarehouseDataSource.jdbcType(f.dataType))
+  private val project = UnsafeProjection.create(schema)
+  private val rows = mutable.ArrayBuffer.empty[InternalRow]
 
-  private val conn = DriverManager.getConnection(conf.url)
-  conn.setAutoCommit(false)
-  private val del =
-    if (conf.keys.isEmpty) null
-    else conn.prepareStatement(s"DELETE FROM ${conf.table} WHERE " +
-      conf.keys.map(k => s"$k = ?").mkString(" AND "))
-  private val ins = conn.prepareStatement(
-    s"INSERT INTO ${conf.table} (${cols.mkString(", ")}) " +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})")
-
-  private var inBatch = 0
-  private val batchKeys = scala.collection.mutable.HashSet.empty[Seq[Any]]
-
-  private def flush(): Unit = {
-    if (inBatch > 0) {
-      if (del != null) del.executeBatch()
-      ins.executeBatch()
-      inBatch = 0
-      batchKeys.clear()
-    }
-  }
-
-  override def write(row: InternalRow): Unit = {
-    val vals = schema.fields.zipWithIndex.map { case (f, i) =>
-      WarehouseDataSource.fromInternal(row, i, f.dataType)
-    }
-    if (del != null) {
-      // value-comparable key: Array[Byte] (BinaryType) has identity
-      // equals/hashCode, which would never detect a repeated binary key
-      // and let both inserts survive one delete
-      val key = keyIdx.map(vals(_) match {
-        case b: Array[Byte] => b.toSeq
-        case v => v
-      }).toSeq
-      if (batchKeys.contains(key)) flush() // repeat key: order the batches
-      batchKeys += key
-      keyIdx.zipWithIndex.foreach { case (ki, i) =>
-        WarehouseDataSource.bind(del, i + 1, vals(ki), sqlTypes(ki))
-      }
-      del.addBatch()
-    }
-    vals.indices.foreach(i => WarehouseDataSource.bind(ins, i + 1, vals(i), sqlTypes(i)))
-    ins.addBatch()
-    inBatch += 1
-    if (inBatch >= WarehouseDataSource.BatchSize) flush()
-  }
-
-  override def commit(): WriterCommitMessage = {
-    flush()
-    conn.commit()
-    new WriterCommitMessage {}
-  }
-
-  override def abort(): Unit = conn.rollback()
-
-  override def close(): Unit = {
-    if (del != null) del.close()
-    ins.close()
-    conn.close()
-  }
+  override def write(row: InternalRow): Unit = rows += project(row).copy()
+  override def commit(): WriterCommitMessage = WarehouseRows(partition, rows.toArray)
+  override def abort(): Unit = ()
+  override def close(): Unit = ()
 }

@@ -17,7 +17,8 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
 
   /** The failure event a stage attempt wrote, parsed. */
   private def event(base: String, name: String): JsonNode =
-    new ObjectMapper().readTree(Paths.get(s"$base/failure_events/$name.json").toFile)
+    new ObjectMapper().readTree(
+      Paths.get(s"$base/failure_events/${RunPaths.fileName(name)}.json").toFile)
 
   test("ok: full chain passes, canary ≥ 10 rows, reconcile verdict written") {
     val base = tmp()
@@ -170,6 +171,55 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
       GroceryPipeline.validate(spark, RunPaths(base, "run-missing"))
     }
     assert(e.getMessage.contains("run-missing"))
+  }
+
+  test("a missing artifact is tried once; other I/O errors are retried") {
+    val base = tmp()
+    var tries = 0
+    intercept[java.io.FileNotFoundException] {
+      Retry(1, 0, Retry.transient) {
+        tries += 1
+        Checks.requireArtifacts(spark, Seq(s"$base/absent.json"), "run-missing")
+      }
+    }
+    assert(tries == 1)
+    assert(!Retry.transient(new java.nio.file.NoSuchFileException(s"$base/absent.json")))
+    tries = 0
+    intercept[java.io.IOException] {
+      Retry(1, 0, Retry.transient) {
+        tries += 1
+        throw new java.io.IOException("reset")
+      }
+    }
+    assert(tries == 2)
+    assert(Retry.transient(new java.net.http.HttpTimeoutException("slow")))
+  }
+
+  test("every run_id names one distinct directory inside grocery_runs") {
+    val base = tmp()
+    val runs = Paths.get(base, "grocery_runs")
+    val ids = Seq("..", ".", "a/b", "run%41", "runA", "é", "e\u0301", "中", "😀",
+      "a b", "run-00001", "seed-00000")
+    val dirs = ids.map { id =>
+      val paths = RunPaths(base, id)
+      paths.mkdirs()
+      Paths.get(paths.root)
+    }
+    dirs.foreach { d =>
+      assert(d.normalize.getParent == runs, d)
+      assert(Files.isDirectory(d), d)
+      assert(d.getFileName.toString.forall(c => c < 0x80 && c != '.'), d)
+    }
+    assert(dirs.distinct.size == ids.size)
+    assert(Files.list(runs).count() == ids.size)
+    intercept[IllegalArgumentException](RunPaths(base, ""))
+    // benchmark run_ids keep their own names
+    assert(dirs.takeRight(2).map(_.getFileName.toString) == Seq("run-00001", "seed-00000"))
+    FailureNotifier.notify(base, "grocery_pipeline", "../x", "ingest", 1,
+      new RuntimeException("boom"))
+    assert(new java.io.File(s"$base/failure_events").list().toSeq ==
+      Seq("%2E%2E%2Fx-ingest-1.json"))
+    assert(event(base, "../x-ingest-1").get("run_id").asText == "../x")
   }
 
   test("reconcile canary fails a short run (< 10 rows)") {

@@ -1,17 +1,26 @@
 package graft.sources
 
 import java.sql.DriverManager
+import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.testkit.SparkSpec
 
 /** The DSv2 warehouse boundary against embedded Derby: the reference's
   * keyed loader behind `df.write.format("graft-warehouse")` — append +
-  * keyed upsert, redelivered-batch idempotence, and the read-back
-  * round-trip through the same connector.
+  * keyed upsert, redelivered-batch idempotence, one transaction per
+  * write, and the read-back round-trip through the same connector.
   */
-class WarehouseDataSourceSpec extends AnyFunSuite with SparkSpec {
+class WarehouseDataSourceSpec extends AnyFunSuite with SparkSpec
+    with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -106,17 +115,93 @@ class WarehouseDataSourceSpec extends AnyFunSuite with SparkSpec {
     assert(readBack("wh_strict").collect().map(_.getLong(0)).toSeq == Seq(5L))
   }
 
-  test("keyed write plans a clustered shuffle; append does not") {
-    exec("CREATE TABLE wh_k (k BIGINT NOT NULL, v BIGINT)")
-    exec("CREATE TABLE wh_nok (k BIGINT NOT NULL, v BIGINT)")
-    val df = (1L to 100L).map(i => (i % 10, i)).toDF("k", "v").repartition(8)
-    // RequiresDistributionAndOrdering: Spark inserts the key shuffle for
-    // the upsert write, so one key's rows never race across connections
-    writeTo(df, "wh_k", keys = Some("k"))
-    writeTo(df, "wh_nok", keys = None)
-    val keyed = readBack("wh_k").count()
-    assert(keyed == 10) // one survivor per key: clustering held per task
-    assert(readBack("wh_nok").count() == 100)
+  /** The physical plan of the write `f` runs, once Spark has reported it. */
+  private def writePlan(f: => Unit): SparkPlan = {
+    val plan = new AtomicReference[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        qe.executedPlan.collectFirst { case w: V2TableWriteExec => plan.set(w) }
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      eventually(timeout(30.seconds))(assert(plan.get != null))
+    } finally spark.listenerManager.unregister(listener)
+    plan.get
+  }
+
+  /** The Spark jobs `f` starts, counted in a job group of its own. */
+  private def jobsIn(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("a keyed write: no exchange, last row by (partition, position)") {
+    exec("CREATE TABLE wh_k (k VARCHAR(10) NOT NULL, v BIGINT)")
+    exec("INSERT INTO wh_k VALUES ('a', 0), ('d', 0)")
+    // partition 0: a1 b2 a5; partition 1: a3 c4 c6
+    val df = spark.sparkContext.parallelize(
+      Seq(("a", 1L), ("b", 2L), ("a", 5L), ("a", 3L), ("c", 4L), ("c", 6L)), 2)
+      .toDF("k", "v")
+    val plan = writePlan(writeTo(df, "wh_k", keys = Some("k")))
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, plan.toString)
+    val out = readBack("wh_k").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(out == Map("a" -> 3L, "b" -> 2L, "c" -> 6L, "d" -> 0L))
+  }
+
+  test("a keyed write runs exactly one Spark job") {
+    exec("CREATE TABLE wh_jobs (k BIGINT NOT NULL, v BIGINT)")
+    val df = spark.sparkContext.parallelize((1L to 100L).map(i => (i % 10, i)), 4)
+      .toDF("k", "v")
+    assert(jobsIn("wh-keyed-write")(writeTo(df, "wh_jobs", keys = Some("k"))) == 1)
+    assert(readBack("wh_jobs").count() == 10)
+  }
+
+  test("a task that fails after another task finished leaves the table unchanged") {
+    exec("CREATE TABLE wh_atomic (k BIGINT NOT NULL, v BIGINT)")
+    exec("INSERT INTO wh_atomic VALUES (1, 100), (2, 200)")
+    // partition 0 (keys 1-5) finishes first; partition 1 fails on its
+    // last row, after a sleep. An append, so no exchange stands between
+    // the failing rows and the write tasks
+    val df = spark.sparkContext.parallelize(1L to 10L, 2)
+      .mapPartitionsWithIndex { (p, it) =>
+        it.map { k =>
+          if (p == 1 && k == 10L) {
+            Thread.sleep(500)
+            throw new IllegalStateException("planted task failure")
+          }
+          (k, k)
+        }
+      }.toDF("k", "v")
+    intercept[Exception](writeTo(df, "wh_atomic", keys = None))
+    assert(readBack("wh_atomic").collect().map(r => r.getLong(0) -> r.getLong(1))
+      .toSeq.sorted == Seq(1L -> 100L, 2L -> 200L))
+  }
+
+  test("a key violation in one partition leaves out every partition's rows") {
+    exec("CREATE TABLE wh_strict2 (id BIGINT NOT NULL PRIMARY KEY)")
+    exec("INSERT INTO wh_strict2 VALUES (5)")
+    // partition 0: 1 2; partition 1: 3 5 (5 violates the PK)
+    val df = spark.sparkContext.parallelize(Seq(1L, 2L, 3L, 5L), 2).toDF("id")
+    intercept[Exception](writeTo(df, "wh_strict2", keys = None))
+    assert(readBack("wh_strict2").collect().map(_.getLong(0)).toSeq == Seq(5L))
+  }
+
+  test("a keyed write on a BINARY key from two partitions keeps one row per key") {
+    exec("CREATE TABLE wh_bin (k VARCHAR(8) FOR BIT DATA NOT NULL, v BIGINT)")
+    // partition 0: [1,2]->1 [3]->2; partition 1: [1,2]->3 [3]->4
+    val df = spark.sparkContext.parallelize(Seq(
+      (Array[Byte](1, 2), 1L), (Array[Byte](3), 2L),
+      (Array[Byte](1, 2), 3L), (Array[Byte](3), 4L)), 2).toDF("k", "v")
+    writeTo(df, "wh_bin", keys = Some("k"))
+    val out = readBack("wh_bin").collect()
+      .map(r => r.getAs[Array[Byte]](0).toSeq -> r.getLong(1))
+    assert(out.length == 2)
+    assert(out.toMap == Map(Seq[Byte](1, 2) -> 3L, Seq[Byte](3) -> 4L))
   }
 
   test("connector read prunes columns into the JDBC SELECT") {
