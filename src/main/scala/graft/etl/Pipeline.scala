@@ -283,11 +283,14 @@ object GroceryPipeline {
 
   /** Stage 4 — load: keyed upsert into the warehouse fact directory
     * (grocery_lib/pg.py:33-60 ON CONFLICT semantics, set-based). Every
-    * row carries the run's id, so the upsert rewrites that run_id's
+    * row carries the run's id, so the upsert commits into that run_id's
     * bucket only. The artifact is read on the driver, and the upsert
-    * takes its batch there ([[Upsert.upsertParquet]]): the bucket write is
-    * the stage's one Spark job. Two records with one txn_id: the later
-    * one in wire order wins, as in the reference's row-by-row upsert.
+    * takes its batch there ([[Upsert.upsertParquet]]). A run_id the
+    * bucket's files cannot hold (a fresh run) is appended as one parquet
+    * file written on the driver, with no Spark job; a redelivered run
+    * rewrites the bucket, the stage's one Spark job. Two records with one
+    * txn_id: the later one in wire order wins, as in the reference's
+    * row-by-row upsert.
     */
   def load(spark: SparkSession, paths: RunPaths, warehouseDir: String): Unit = {
     Checks.requireArtifacts(spark, Seq(paths.enrichedFile), paths.runId)

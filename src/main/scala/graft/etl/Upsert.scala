@@ -3,16 +3,26 @@ package graft.etl
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, SparkFilterApi}
+import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal, Murmur3Hash}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Keyed upsert semantics (reference: grocery_lib/pg.py:33-60 —
   * `INSERT ... ON CONFLICT (run_id, txn_id) DO UPDATE`, executed row-at-a-
@@ -34,27 +44,43 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * carry one first-key value (the streaming sinks keyed by query or event
   * id) keeps its table flat instead.
   *
-  * '''Two commit paths,''' one swap protocol ([[swapIn]]):
-  *  - a batch whose caller names its one first-key value (a pipeline
-  *    run: one run_id), into a bucketed table, merges against that
-  *    value's bucket only and swaps `__bucket=k` through the hidden
-  *    `.__bucket=k.tmp` and `.__bucket=k.old` inside the table (Spark's
-  *    listing skips names that start with `.`), so a 40-row load
-  *    rewrites 1/16 of the table. The batch is one run, so it is taken
-  *    to the driver: its bucket is checked and it is deduplicated there,
-  *    a tie on the version going to the row later in batch order; the
-  *    bucket's rows for its keys drop out by a literal predicate; the
-  *    table's schema comes from one parquet footer. The bucket write is
-  *    the one Spark job;
-  *  - any other batch (the first write, a batch with no first-key value
-  *    named, a flat table) merges against the whole table and swaps it
-  *    through the siblings `<dir>__tmp` and `<dir>__old`. It is
-  *    deduplicated by [[latestPerKey]], shuffling only the batch, and its
-  *    keys drop out of the table by a broadcast left-anti join
-  *    ([[merge]]). A bucketed table is shuffled by bucket and written
-  *    partitioned by `__bucket`; an empty one is one schema-only file in
-  *    bucket 0, so it stays readable. A flat table is written as it is
-  *    merged, as [[replaceParquet]] writes.
+  * '''Three commit paths.''' A batch whose caller names its one
+  * first-key value `R` (a pipeline run: one run_id), into a bucketed
+  * table, commits into `R`'s bucket `k` alone. The batch is one run, so it
+  * is taken to the driver: its bucket is checked, it is deduplicated
+  * there (a tie on the version going to the row later in batch order),
+  * and the table's schema comes from one parquet footer. Then it takes
+  * one of two paths:
+  *  - '''append,''' when no data file of bucket `k` can hold `R` and the
+  *    bucket holds fewer than [[MaxFilesPerBucket]] files. Each file's
+  *    footer is read on the driver, and parquet's own row-group filter for
+  *    `<first key> = R` runs over its statistics and, where they cover
+  *    `R`, over its dictionary; a column chunk that is not wholly
+  *    dictionary-encoded, or a first key that is not a string, counts as
+  *    possibly holding `R`. The batch is written as one parquet file on the driver
+  *    by Spark's own parquet writer, staged in the hidden
+  *    `.__bucket=k.tmp`, and renamed into `__bucket=k`. That one rename is
+  *    the commit point, so a reader sees the table before or after it: an
+  *    append has no read window. No Spark job runs;
+  *  - '''bucket rewrite,''' otherwise (`R` may be present, as in a
+  *    redelivery, or the bucket is full). The batch merges against the
+  *    bucket only, whose rows for the batch's keys drop out by a literal
+  *    predicate, and `__bucket=k` is swapped ([[swapIn]]) through the
+  *    hidden `.__bucket=k.tmp` and `.__bucket=k.old` inside the table
+  *    (Spark's listing skips names that start with `.`). So a 40-row load
+  *    rewrites 1/16 of the table, and the rewrite compacts the bucket's
+  *    appended files. The bucket write is the one Spark job.
+  *
+  * A missing bucket is swapped in whole on either path. Any other batch
+  * (the first write, a batch with no first-key value named, a flat table)
+  * takes the '''whole-table''' path: it merges against the whole table
+  * and swaps it through the siblings `<dir>__tmp` and `<dir>__old`. It is
+  * deduplicated by [[latestPerKey]], shuffling only the batch, and its
+  * keys drop out of the table by a broadcast left-anti join ([[merge]]).
+  * A bucketed table is shuffled by bucket and written partitioned by
+  * `__bucket`; an empty one is one schema-only file in bucket 0, so it
+  * stays readable. A flat table is written as it is merged, as
+  * [[replaceParquet]] writes.
   *
   * '''Recovery''' runs before every upsert, at both levels, with one
   * rule: first for the table, then for each bucket, an old copy whose
@@ -63,9 +89,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * '''Read window.''' Between the two renames of a bucket swap, a reader
   * sees the table without that bucket; between those of a table swap, it
-  * sees no table. A pipeline never reads the warehouse while its load
-  * runs. On a real deployment this is a MERGE INTO on a table format
-  * (Delta/Iceberg) whose snapshot commit is truly atomic.
+  * sees no table; an append has none. A pipeline never reads the
+  * warehouse while its load runs. On a real deployment this is a MERGE
+  * INTO on a table format (Delta/Iceberg) whose snapshot commit is truly
+  * atomic.
   */
 object Upsert {
 
@@ -76,6 +103,12 @@ object Upsert {
     * parallel partition discovery threshold (see the object doc).
     */
   val Buckets = 16
+
+  /** Data files a bucket may hold: a one-run load appends a file to a
+    * bucket that holds fewer, and rewrites (so compacts) one that holds
+    * this many. Every file costs a read of the whole table about 1 ms.
+    */
+  val MaxFilesPerBucket = 8
 
   /** The bucket of a first-key value. */
   def bucket(firstKey: Column): Column = pmod(hash(firstKey), lit(Buckets))
@@ -126,7 +159,8 @@ object Upsert {
     * `firstKey` is the one value of `keys.head` that the caller knows
     * every row of the batch carries (a pipeline run's run_id). With it,
     * the batch is collected to the driver and commits into that value's
-    * bucket alone; a row in another bucket fails the upsert and leaves the
+    * bucket alone, appended as one file when the bucket cannot hold the
+    * value yet; a row in another bucket fails the upsert and leaves the
     * table as it was. Without it, the batch takes the whole-table path, so
     * its plan runs once and never passes through the driver.
     *
@@ -157,20 +191,29 @@ object Upsert {
         val live = bucketDir(table, k)
         val schema = tableSchema(fs, buckets)
         val batch = latestOnDriver(updates, keys, versionCol, value, k)
-        // the bucket's rows for the batch's keys, as a literal predicate
-        val batchKeys = batch.map(r => struct(keys.map { c =>
-          lit(r.getAs[Any](c)).cast(updates.schema(c).dataType).as(c)
-        }: _*))
-        swapIn(fs, live, hidden(live, "tmp"), hidden(live, "old")) { tmp =>
-          val base =
-            if (fs.exists(live)) spark.read.schema(schema).parquet(live.toString)
-            else spark.createDataFrame(java.util.List.of[Row](), schema)
-          base.filter(!struct(keys.map(col): _*).isin(batchKeys: _*))
-            .unionByName(spark.createDataFrame(batch.asJava, updates.schema))
-            // fold the batch into the bucket's own partitions, so its file
-            // count does not grow by the batch's files on every upsert
-            .coalesce(base.rdd.getNumPartitions.max(1))
-            .write.mode("overwrite").parquet(tmp.toString)
+        val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
+        val rows = spark.createDataFrame(batch.asJava, updates.schema)
+        val hasLive = fs.exists(live)
+        val files = if (hasLive) dataFiles(fs, live) else Nil
+        // no file of the bucket can hold the run: append one
+        if (files.size < MaxFilesPerBucket && eqFilter(schema, keys.head, value)
+            .exists(pred => files.forall(!mayHold(fs.getConf, _, pred))))
+          // the table's columns, in its order, with the batch's types widened
+          append(spark, fs, live, empty.unionByName(rows))
+        else {
+          // the bucket's rows for the batch's keys, as a literal predicate
+          val batchKeys = batch.map(r => struct(keys.map { c =>
+            lit(r.getAs[Any](c)).cast(updates.schema(c).dataType).as(c)
+          }: _*))
+          swapIn(fs, live, hidden(live, "tmp"), hidden(live, "old")) { tmp =>
+            val base = if (hasLive) spark.read.schema(schema).parquet(live.toString) else empty
+            base.filter(!struct(keys.map(col): _*).isin(batchKeys: _*))
+              .unionByName(rows)
+              // fold the batch into the bucket's own partitions, so its file
+              // count does not grow by the batch's files on every upsert
+              .coalesce(base.rdd.getNumPartitions.max(1))
+              .write.mode("overwrite").parquet(tmp.toString)
+          }
         }
       case None => replaceTable(spark, fs, dir, bucketed) {
         case Some(prev) =>
@@ -240,6 +283,17 @@ object Upsert {
     latest.values.toSeq
   }
 
+  /** The data files of a table directory: what Spark's listing reads. */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter { f =>
+      f.isFile && !f.getPath.getName.startsWith(".") && !f.getPath.getName.startsWith("_")
+    }
+
+  /** A parquet file's footer, read on the driver without opening a reader. */
+  private def footer(conf: Configuration, file: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+      ParquetMetadataConverter.NO_FILTER)
+
   /** The table's columns, without [[BucketCol]], from the footer of the
     * first parquet file found in `buckets`, read on the driver:
     * `spark.read.parquet(dir).schema` would run an inference job. A file
@@ -248,17 +302,81 @@ object Upsert {
     * nullable, as a parquet read gives them.
     */
   private def tableSchema(fs: FileSystem, buckets: Seq[Path]): StructType = {
-    val file = buckets.iterator.flatMap(b => fs.listStatus(b).iterator.map(_.getPath))
-      .find(p => !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+    val file = buckets.iterator.flatMap(dataFiles(fs, _)).nextOption()
       .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under ${buckets.mkString(", ")}"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, fs.getConf))
-    val schema = try {
-      val meta = reader.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
-    } finally reader.close()
+    val meta = footer(fs.getConf, file).getFileMetaData
+    val schema = Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(new ParquetToSparkSchemaConverter().convert(meta.getSchema))
     StructType(schema.map(_.copy(nullable = true)))
+  }
+
+  /** `name = value` as a parquet predicate, for a top-level string column
+    * of `schema` (a run_id); None for any other key, which no file can
+    * then rule out.
+    */
+  private def eqFilter(schema: StructType, name: String, value: Any): Option[FilterPredicate] =
+    (schema.find(_.name == name).map(_.dataType), value) match {
+      case (Some(StringType), s: String) =>
+        Some(FilterApi.eq(SparkFilterApi.binaryColumn(Array(name)), Binary.fromString(s)))
+      case _ => None
+    }
+
+  /** Whether the parquet file may hold a row that `pred` keeps, by
+    * parquet-mr's own row-group filter: at the statistics level over the
+    * footer, then, only for a file whose statistics cover the value, at
+    * the dictionary level, which opens a reader. A column chunk that is
+    * not wholly dictionary-encoded cannot be ruled out there.
+    */
+  private def mayHold(conf: Configuration, file: FileStatus, pred: FilterPredicate): Boolean = {
+    val meta = footer(conf, file)
+    meta.getBlocks.asScala.exists(b => !StatisticsFilter.canDrop(pred, b.getColumns)) && {
+      val in = HadoopInputFile.fromStatus(file, conf)
+      // over the session's configuration: a plain builder loads a new one,
+      // about 8 ms a file
+      val options = HadoopReadOptions.builder(conf).withRecordFilter(FilterCompat.get(pred))
+        .useDictionaryFilter(true).useBloomFilter(false).build()
+      val reader = ParquetFileReader.open(in, meta, options, in.newStream())
+      try !reader.getRowGroups.isEmpty finally reader.close()
+    }
+  }
+
+  /** Add `rows` to the bucket directory `live` as one new parquet file,
+    * written on the driver and staged under the bucket's hidden tmp copy.
+    * Its rename into the bucket is the commit point; a crash before it
+    * leaves only the tmp copy, which the next [[recover]] deletes. A
+    * missing bucket is swapped in whole.
+    */
+  private def append(spark: SparkSession, fs: FileSystem, live: Path, rows: DataFrame): Unit = {
+    val tmp = hidden(live, "tmp")
+    if (!fs.exists(live)) swapIn(fs, live, tmp, hidden(live, "old"))(writeOnDriver(spark, _, rows))
+    else {
+      val staged = staging(fs, tmp)(writeOnDriver(spark, tmp, rows))
+      if (!fs.rename(staged, new Path(live, staged.getName)))
+        throw new RuntimeException(s"append failed: $staged -> $live")
+      fs.delete(tmp, true)
+    }
+  }
+
+  /** Write `rows`, a plan over a local relation, as one parquet file under
+    * `dir`, on the driver: the plan's rows come from `executeCollect`,
+    * which runs no job for a local relation, and the file is written by
+    * the writer every Spark write task runs (`ParquetFileFormat`'s), so it
+    * has the same encoding, codec, timestamp type and row metadata. The
+    * name is unique per call. Returns the file.
+    */
+  private def writeOnDriver(spark: SparkSession, dir: Path, rows: DataFrame): Path = {
+    val data = rows.queryExecution.executedPlan.executeCollect()
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, rows.schema)
+    val context = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+    val file = new Path(dir,
+      s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(context)}")
+    val writer = factory.newInstance(file.toString, rows.schema, context)
+    try data.foreach(writer.write)
+    finally writer.close()
+    file
   }
 
   /** A bucket's hidden tmp or old copy, inside the table. */
@@ -314,19 +432,14 @@ object Upsert {
     Seq(tmp, old).foreach(p => if (fs.exists(p)) fs.delete(p, true))
   }
 
-  /** The one commit protocol, run after [[recover]]: `write(tmp)`,
+  /** The swap commit, run after [[recover]]: `write(tmp)`,
     * rename `live` aside to `old`, rename `tmp` to `live`, drop `old`. A
     * failed write deletes its tmp; a crash between the renames leaves
     * `old` for the next [[recover]].
     */
   private def swapIn(fs: FileSystem, live: Path, tmp: Path, old: Path)
       (write: Path => Unit): Unit = {
-    try write(tmp)
-    catch {
-      case e: Throwable =>
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        throw e
-    }
+    staging(fs, tmp)(write(tmp))
     val hadLive = fs.exists(live)
     if (hadLive && !fs.rename(live, old))
       throw new RuntimeException(s"swap failed: $live -> $old")
@@ -337,4 +450,13 @@ object Upsert {
     }
     if (hadLive) fs.delete(old, true)
   }
+
+  /** Run `write`, which writes under `tmp`; if it fails, delete `tmp`. */
+  private def staging[T](fs: FileSystem, tmp: Path)(write: => T): T =
+    try write
+    catch {
+      case e: Throwable =>
+        if (fs.exists(tmp)) fs.delete(tmp, true)
+        throw e
+    }
 }

@@ -84,10 +84,11 @@ object CrashingFileSystem {
   }
 }
 
-/** Crash-point enumeration of [[Upsert.upsertParquet]]: for each of three
-  * upsert shapes (a first write, a one-bucket merge, a merge over several
-  * buckets), count the mutating filesystem calls of a clean run, then for
-  * every k crash at call k, run the next upsert (which recovers), and read.
+/** Crash-point enumeration of [[Upsert.upsertParquet]]: for each of four
+  * upsert shapes (a first write, a one-bucket merge, a one-run append, a
+  * merge over several buckets), count the mutating filesystem calls of a
+  * clean run, then for every k crash at call k, run the next upsert (which
+  * recovers), and read.
   * The table must then equal the state before or the state after the
   * crashed upsert, with the next batch applied on top: never a mix, never
   * rows lost, and no hidden leftover.
@@ -210,6 +211,12 @@ class UpsertCrashSpec extends AnyFunSuite with SparkSpec {
 
   test("crash at every mutating call of a one-bucket merge, then recover") {
     enumerate(seeded, one(ra, 1 until 5, 900, 2), next = one(rb, 2 until 4, 500, 3))
+  }
+
+  test("crash at every mutating call of a one-run append, then recover") {
+    // a run in ra's bucket that the seeded table does not hold
+    val fresh = Iterator.from(0).map(i => s"fresh-$i").find(bucketOf(_) == bucketOf(ra)).get
+    enumerate(seeded, one(fresh, 0 until 3, 700, 2), next = one(rb, 2 until 4, 500, 3))
   }
 
   test("crash at every mutating call of a multi-bucket merge, then recover") {

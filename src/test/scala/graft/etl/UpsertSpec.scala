@@ -253,6 +253,115 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
       Upsert.upsertParquet(spark, dir, narrow.withColumn("extra", lit(1)), keys, "v",
         firstKey = Some(other))
     }
+    // the same into a bucket that exists, for a run it does not hold: an
+    // appended file
+    val fresh = (40 until 200).map(i => s"run-$i").find(r => bucketOf(r) == bucketOf(other)).get
+    val before = bucketFiles(dir)
+    val narrowFresh = Seq((fresh, "t1", 6L, 9)).toDF("run_id", "txn_id", "revenue_cents", "v")
+    Upsert.upsertParquet(spark, dir, narrowFresh, keys, "v", firstKey = Some(fresh))
+    val mine = s"__bucket=${bucketOf(fresh)}"
+    assert(bucketFiles(dir)(mine).size == before(mine).size + 1)
+    bucketFiles(dir).foreach { case (b, files) => files.keys.foreach { f =>
+      assert(spark.read.parquet(s"$dir/$b/$f").schema("v").dataType ==
+        org.apache.spark.sql.types.LongType, s"$b/$f")
+    } }
+    assert(read(dir) == base.as[(String, String, Long, Long)].collect().toSet +
+      ((other, "t1", 5L, 9L)) + ((fresh, "t1", 6L, 9L)))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Upsert.upsertParquet(spark, dir, narrowFresh.withColumn("extra", lit(1)), keys, "v",
+        firstKey = Some(fresh))
+    }
+    assert(bucketFiles(dir)(mine).size == before(mine).size + 1)
+  }
+
+  /** The footer of a parquet file. */
+  private def footer(file: String) = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+    spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(file),
+    org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+
+  /** Upsert one fresh run into the table at `dir` and check that it
+    * appended exactly one parquet file to its bucket: every other file of
+    * the table keeps its name and size, and no hidden copy is left.
+    * Returns the new file.
+    */
+  private def assertAppends(dir: String, runId: String, v: Long): String = {
+    val before = bucketFiles(dir)
+    Upsert.upsertParquet(spark, dir, runs(Seq(runId), v), keys, "v", firstKey = Some(runId))
+    val after = bucketFiles(dir)
+    val mine = s"__bucket=${bucketOf(runId)}"
+    val mineBefore = before.getOrElse(mine, Map.empty)
+    assert(after - mine == before - mine)
+    val added = after(mine).keySet -- mineBefore.keySet
+    assert(added.size == 1 && after(mine).size == mineBefore.size + 1, s"$runId: $mine $after")
+    assert(after(mine) -- added == mineBefore)
+    assert(new java.io.File(dir).list().forall(!_.startsWith(s".${Upsert.BucketCol}=")))
+    s"$dir/$mine/${added.head}"
+  }
+
+  test("a fresh run appends one parquet file: every other file keeps its name and size") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val ids = (0 until 40).map(i => s"run-$i")
+    Upsert.upsertParquet(spark, dir, runs(ids, 1), keys, "v")
+    val existing = bucketFiles(dir).keySet
+    val fresh = (40 until 200).map(i => s"run-$i")
+      .find(r => existing.contains(s"__bucket=${bucketOf(r)}")).get
+    val added = assertAppends(dir, fresh, 2)
+    assert(read(dir) == (runs(ids, 1).as[(String, String, Long, Long)].collect() ++
+      runs(Seq(fresh), 2).as[(String, String, Long, Long)].collect()).toSet)
+    // written as a Spark write task writes it: its codec, its row metadata
+    val old = bucketFiles(dir).collectFirst { case (b, fs) if fs.nonEmpty && !added.contains(s"/$b/") =>
+      s"$dir/$b/${fs.keys.head}" }.get
+    def codec(file: String) = footer(file).getBlocks.get(0).getColumns.get(0).getCodec
+    assert(codec(added) == codec(old))
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    assert(footer(added).getFileMetaData.getKeyValueMetaData.containsKey(rowMeta))
+    assert(spark.read.parquet(added).schema == spark.read.parquet(old).schema)
+    // a redelivery of the appended run rewrites its bucket, folding the file in
+    Upsert.upsertParquet(spark, dir, runs(Seq(fresh), 3), keys, "v", firstKey = Some(fresh))
+    assert(!bucketFiles(dir)(s"__bucket=${bucketOf(fresh)}").contains(added.split('/').last))
+    assert(read(dir) == (runs(ids, 1).as[(String, String, Long, Long)].collect() ++
+      runs(Seq(fresh), 3).as[(String, String, Long, Long)].collect()).toSet)
+  }
+
+  test("after a redelivery compacts a bucket, a fresh run into it still appends") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    val ids = (0 until 40).map(i => s"run-$i")
+    Upsert.upsertParquet(spark, dir, runs(ids, 1), keys, "v")
+    val (k, members) = ids.groupBy(bucketOf).maxBy(_._2.size)
+    assert(members.size >= 3, members)
+    Upsert.upsertParquet(spark, dir, runs(members.take(1), 2), keys, "v",
+      firstKey = Some(members.head))
+    assert(bucketFiles(dir)(s"__bucket=$k").size == 1)
+    // an id inside the one file's min and max: its statistics cannot rule
+    // the run out, its dictionary can
+    val fresh = (40 until 2000).map(i => s"run-$i")
+      .find(r => bucketOf(r) == k && r > members.min && r < members.max).get
+    assertAppends(dir, fresh, 2)
+    assert(read(dir) == (runs(ids, 1).as[(String, String, Long, Long)].collect()
+      .filterNot(_._1 == members.head) ++
+      runs(Seq(members.head, fresh), 2).as[(String, String, Long, Long)].collect()).toSet)
+  }
+
+  test("a bucket of MaxFilesPerBucket files is rewritten by its next load, never grown past it") {
+    val dir = Files.createTempDirectory("upsert").toString + "/fct"
+    Upsert.upsertParquet(spark, dir, runs(Seq("run-0"), 1), keys, "v")
+    val k = bucketOf("run-0")
+    val mine = s"__bucket=$k"
+    val fresh = Iterator.from(1).map(i => s"run-$i").filter(bucketOf(_) == k)
+      .take(Upsert.MaxFilesPerBucket + 2).toSeq
+    var rewrites = 0
+    fresh.foreach { r =>
+      val before = bucketFiles(dir)(mine)
+      if (before.size < Upsert.MaxFilesPerBucket) assertAppends(dir, r, 1)
+      else {
+        Upsert.upsertParquet(spark, dir, runs(Seq(r), 1), keys, "v", firstKey = Some(r))
+        assert(bucketFiles(dir)(mine).keySet.intersect(before.keySet).isEmpty, s"$r: not rewritten")
+        rewrites += 1
+      }
+      assert(bucketFiles(dir).values.forall(_.size <= Upsert.MaxFilesPerBucket), bucketFiles(dir))
+    }
+    assert(rewrites >= 1)
+    assert(read(dir) == runs("run-0" +: fresh, 1).as[(String, String, Long, Long)].collect().toSet)
   }
 
   test("bucketed = false keeps a table flat, and flattens a bucketed one") {

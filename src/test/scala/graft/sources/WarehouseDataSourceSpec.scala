@@ -76,9 +76,9 @@ class WarehouseDataSourceSpec extends AnyFunSuite with SparkSpec
 
   test("same-key rows in one write collapse to the last by source order") {
     exec("CREATE TABLE wh_dup (k VARCHAR(10) NOT NULL, v BIGINT)")
-    // single partition => well-defined source order; the writer must
-    // flush between the two same-key rows or both inserts would survive
-    // one delete
+    // single partition => well-defined source order; the driver-side
+    // commit keeps the last row per key by (partition, position), so the
+    // later "a" is the one inserted
     val df = Seq(("a", 1L), ("b", 2L), ("a", 7L)).toDF("k", "v").coalesce(1)
     writeTo(df, "wh_dup", keys = Some("k"))
     val out = readBack("wh_dup").collect()
