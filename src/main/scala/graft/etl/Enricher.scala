@@ -69,12 +69,31 @@ object Enricher {
 
   /** fct_sales → mart_daily_sales shape (reference:
     * mart_daily_sales.sql:6-15 — group by day, store; count/sum/sum).
+    *
+    * Two paths give the same rows, types and nullability:
+    *  - '''footer merge,''' when `fct` is a bare parquet scan, such as
+    *    `spark.read.parquet(warehouse)` of a table [[Upsert]] wrote, whose
+    *    every file carries its [[DailySalesPartials]] written under this
+    *    session's time zone: the files' partials, read from their footers
+    *    at this call, are merged on the driver into a local relation, so
+    *    no Spark job runs;
+    *  - '''scan''' ([[dailySalesMartByScan]]), otherwise: an operator over
+    *    the scan, a file without partials (written by another writer or
+    *    before they existed, or holding a null or too many groups), a
+    *    writer in another time zone, any other source, or a merged sum
+    *    that overflows.
     */
   def dailySalesMart(fct: DataFrame): DataFrame = {
+    val scan = dailySalesMartByScan(fct)
+    DailySalesPartials.merged(fct)
+      .fold(scan)(DailySalesPartials.toFrame(fct.sparkSession, _, scan.schema))
+  }
+
+  /** The mart by a scan of `fct`: one aggregate over every row. */
+  def dailySalesMartByScan(fct: DataFrame): DataFrame =
     fct.groupBy(to_date(col("event_time")).as("day"), col("store_id"))
       .agg(
         count(lit(1)).as("txns"),
         sum(col("revenue_cents")).as("gross_revenue_cents"),
         sum(col("quantity").cast("long")).as("units"))
-  }
 }

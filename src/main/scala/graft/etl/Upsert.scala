@@ -19,7 +19,7 @@ import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, Literal, Murmur3Hash}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
@@ -82,6 +82,13 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * stays readable. A flat table is written as it is merged, as
   * [[replaceParquet]] writes.
   *
+  * '''Partials.''' Every file written here (the append, the bucket
+  * rewrite, the whole-table write and its schema-only file) is written
+  * through [[DailySalesParquetFormat]], so it carries its
+  * [[DailySalesPartials]] in its footer and `Enricher.dailySalesMart`
+  * answers a bare read of the table from its footers; a table without the
+  * mart's columns gets none.
+  *
   * '''Recovery''' runs before every upsert, at both levels, with one
   * rule: first for the table, then for each bucket, an old copy whose
   * live copy is missing (a crash between the two renames) is renamed
@@ -106,9 +113,18 @@ object Upsert {
 
   /** Data files a bucket may hold: a one-run load appends a file to a
     * bucket that holds fewer, and rewrites (so compacts) one that holds
-    * this many. Every file costs a read of the whole table about 1 ms.
+    * this many. Every file costs the mart ([[Enricher.dailySalesMart]])
+    * one footer read, about 0.25 ms: over a 300k-row table (Spark
+    * `local[4]`, 4 vCPU, p50 of 15 calls) its footer merge took 30, 39 and
+    * 47–64 ms at 16, 64 and 128 files, and its scan 158–206, 224–275 and
+    * 223–381 ms.
     */
   val MaxFilesPerBucket = 8
+
+  /** The format of every file written here: parquet, with each file's
+    * [[DailySalesPartials]] in its footer.
+    */
+  private val Format = classOf[DailySalesParquetFormat].getName
 
   /** The bucket of a first-key value. */
   def bucket(firstKey: Column): Column = pmod(hash(firstKey), lit(Buckets))
@@ -212,7 +228,7 @@ object Upsert {
               // fold the batch into the bucket's own partitions, so its file
               // count does not grow by the batch's files on every upsert
               .coalesce(base.rdd.getNumPartitions.max(1))
-              .write.mode("overwrite").parquet(tmp.toString)
+              .write.format(Format).mode("overwrite").save(tmp.toString)
           }
         }
       case None => replaceTable(spark, fs, dir, bucketed) {
@@ -290,7 +306,7 @@ object Upsert {
     }
 
   /** A parquet file's footer, read on the driver without opening a reader. */
-  private def footer(conf: Configuration, file: FileStatus): ParquetMetadata =
+  private[etl] def footer(conf: Configuration, file: FileStatus): ParquetMetadata =
     ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
       ParquetMetadataConverter.NO_FILTER)
 
@@ -361,14 +377,14 @@ object Upsert {
   /** Write `rows`, a plan over a local relation, as one parquet file under
     * `dir`, on the driver: the plan's rows come from `executeCollect`,
     * which runs no job for a local relation, and the file is written by
-    * the writer every Spark write task runs (`ParquetFileFormat`'s), so it
-    * has the same encoding, codec, timestamp type and row metadata. The
-    * name is unique per call. Returns the file.
+    * the writer every write task here runs ([[DailySalesParquetFormat]]'s),
+    * so it has the same encoding, codec, timestamp type, row metadata and
+    * partials. The name is unique per call. Returns the file.
     */
   private def writeOnDriver(spark: SparkSession, dir: Path, rows: DataFrame): Path = {
     val data = rows.queryExecution.executedPlan.executeCollect()
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, rows.schema)
+    val factory = new DailySalesParquetFormat().prepareWrite(spark, job, Map.empty, rows.schema)
     val context = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
     val file = new Path(dir,
@@ -410,13 +426,13 @@ object Upsert {
     val table = new Path(dir)
     swapIn(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old")) { tmp =>
       val out = mergeFn(if (fs.exists(table)) Some(spark.read.parquet(dir)) else None)
-      if (!bucketed) out.write.mode("overwrite").parquet(tmp.toString)
+      if (!bucketed) out.write.format(Format).mode("overwrite").save(tmp.toString)
       else {
-        out.write.partitionBy(BucketCol).mode("overwrite").parquet(tmp.toString)
+        out.write.format(Format).partitionBy(BucketCol).mode("overwrite").save(tmp.toString)
         if (!fs.listStatus(tmp).exists(_.getPath.getName.startsWith(BucketCol + "=")))
           spark.createDataFrame(java.util.List.of[Row](),
               StructType(out.schema.filterNot(_.name == BucketCol)))
-            .write.parquet(bucketDir(tmp, 0).toString)
+            .write.format(Format).save(bucketDir(tmp, 0).toString)
       }
     }
   }
