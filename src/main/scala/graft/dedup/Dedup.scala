@@ -1167,36 +1167,22 @@ object Dedup {
   /** Crash-safe RE-SIZE of a live index directory (the streaming-ingest
     * rebuild trigger fires mid-stream): the re-bucketed rows AND their
     * meta are written to a temp dir first, then rename-swapped into
-    * place with [[graft.etl.Upsert.replaceParquet]]'s two-rename
-    * choreography — at no instant can a reader see new-width rows under
-    * old-width meta (the silent-candidate-loss failure a separate meta
-    * write would open).
+    * place by the same recovery and two-rename swap as
+    * [[graft.etl.Upsert.replaceParquet]] — at no instant can a reader see
+    * new-width rows under old-width meta (the silent-candidate-loss
+    * failure a separate meta write would open).
     */
   def rebuildCosineIndexSwap(corpus: DataFrame, idCol: String,
       vecCol: String, indexDir: String, tables: Int = 24,
       seed: Long = 42L, floorBits: Int = 16): CosineIndexMeta = {
-    val spark = corpus.sparkSession
-    val fs = fsOf(spark, indexDir)
+    val fs = fsOf(corpus.sparkSession, indexDir)
     val target = new org.apache.hadoop.fs.Path(indexDir)
     val tmp = new org.apache.hadoop.fs.Path(indexDir + "__tmp")
     val old = new org.apache.hadoop.fs.Path(indexDir + "__old")
-    // recovery: a previous run that died between its two renames left
-    // the live index at __old and no target (replaceParquet's contract)
-    if (!fs.exists(target) && fs.exists(old) && !fs.rename(old, target))
-      throw new RuntimeException(s"recovery failed: $old -> $target")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val meta = writeCosineIndex(corpus, idCol, vecCol, tmp.toString,
-      tables, seed, floorBits)
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadTarget = fs.exists(target)
-    if (hadTarget && !fs.rename(target, old))
-      throw new RuntimeException(s"swap failed: $target -> $old")
-    if (!fs.rename(tmp, target)) {
-      if (hadTarget) fs.rename(old, target)
-      throw new RuntimeException(s"swap failed: $tmp -> $target")
+    graft.etl.Upsert.recover(fs, target, tmp, old)
+    graft.etl.Upsert.swapIn(fs, target, tmp, old) { t =>
+      writeCosineIndex(corpus, idCol, vecCol, t.toString, tables, seed, floorBits)
     }
-    if (hadTarget) fs.delete(old, true)
-    meta
   }
 
   /** Incremental selective near-dup: pairs (cosine ≥ threshold) that

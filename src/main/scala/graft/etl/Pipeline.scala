@@ -304,17 +304,16 @@ object GroceryPipeline {
 
   /** Stage 5 — reconcile: count canary under THIS run's id (fixing the
     * reference's wrong-run_id bug, grocery_reconcile_dag.py:17) and write
-    * the verdict artifact with tmp+rename. On a bucketed warehouse only
-    * the run's bucket is read; a flat one (an older layout) is filtered
-    * whole. The scan reads run_id alone, under a schema stated here, so
-    * the count is the stage's one Spark job.
+    * the verdict artifact with tmp+rename. Only the run's bucket of the
+    * warehouse is read ([[Upsert.bucketDir]]), and the scan reads run_id
+    * alone, under a schema stated here, so the count is the stage's one
+    * Spark job.
     */
   def reconcile(spark: SparkSession, paths: RunPaths, warehouseDir: String,
       minRows: Long = 10): CheckResult = {
     val table = new org.apache.hadoop.fs.Path(warehouseDir)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val scanned = if (Upsert.bucketDirs(fs, table).isEmpty) table
-      else Upsert.bucketDir(table, Upsert.bucketOf(paths.runId))
+    val scanned = Upsert.bucketDir(table, Upsert.bucketOf(paths.runId))
     val runIds = StructType(Seq(StructField("run_id", StringType)))
     val mine =
       if (!fs.exists(scanned)) spark.createDataFrame(java.util.List.of[Row](), runIds)

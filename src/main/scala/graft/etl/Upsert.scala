@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Keyed upsert semantics (reference: grocery_lib/pg.py:33-60 —
   * `INSERT ... ON CONFLICT (run_id, txn_id) DO UPDATE`, executed row-at-a-
-  * time; sql/init.sql:47-61 — `ON CONFLICT DO NOTHING` idempotent seeds).
+  * time).
   *
   * The row-at-a-time loop is deliberately NOT ported: the set-based
   * equivalent deduplicates the batch on the key, drops the table rows
@@ -40,9 +40,11 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * plus `__bucket` (int); a filter on `__bucket` prunes the scan to one
   * directory. The bucket count stays at or below
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32), so
-  * listing the table runs no Spark job. A caller whose batches never
-  * carry one first-key value (the streaming sinks keyed by query or event
-  * id) keeps its table flat instead.
+  * listing the table runs no Spark job. A directory that holds data files
+  * but no bucket directory is not such a table: an upsert refuses it
+  * before it writes anything. A table that is merged whole on every
+  * write (the streaming sinks keyed by query or event id) uses
+  * [[mergeParquet]] instead, which keeps it flat.
   *
   * '''Three commit paths.''' A batch whose caller names its one
   * first-key value `R` (a pipeline run: one run_id), into a bucketed
@@ -72,15 +74,14 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    appended files. The bucket write is the one Spark job.
   *
   * A missing bucket is swapped in whole on either path. Any other batch
-  * (the first write, a batch with no first-key value named, a flat table)
-  * takes the '''whole-table''' path: it merges against the whole table
-  * and swaps it through the siblings `<dir>__tmp` and `<dir>__old`. It is
+  * (the first write, a batch with no first-key value named) takes the
+  * '''whole-table''' path: it merges against the whole table and swaps
+  * it through the siblings `<dir>__tmp` and `<dir>__old`. It is
   * deduplicated by [[latestPerKey]], shuffling only the batch, and its
   * keys drop out of the table by a broadcast left-anti join ([[merge]]).
-  * A bucketed table is shuffled by bucket and written partitioned by
-  * `__bucket`; an empty one is one schema-only file in bucket 0, so it
-  * stays readable. A flat table is written as it is merged, as
-  * [[replaceParquet]] writes.
+  * The result is shuffled by bucket and written partitioned by
+  * `__bucket`; an empty table is one schema-only file in bucket 0, so it
+  * stays readable.
   *
   * '''Partials.''' Every file written here (the append, the bucket
   * rewrite, the whole-table write and its schema-only file) is written
@@ -162,15 +163,11 @@ object Upsert {
       .unionByName(latestPerKey(updates, keys, versionCol))
   }
 
-  /** ON CONFLICT DO NOTHING: append only rows whose key is absent. */
-  def insertIfAbsent(existing: DataFrame, rows: DataFrame,
-      keys: Seq[String]): DataFrame =
-    existing.unionByName(
-      rows.join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti"))
-
   /** Upsert a batch into the parquet table at `dir` (layout, commit
-    * paths and recovery: see the object doc). Neither the batch nor a
-    * flat table may carry a column named [[BucketCol]].
+    * paths and recovery: see the object doc). The batch may not carry a
+    * column named [[BucketCol]], and `dir`, when it holds data files, must
+    * hold them in bucket directories; either is refused with an
+    * `IllegalArgumentException` before anything is written.
     *
     * `firstKey` is the one value of `keys.head` that the caller knows
     * every row of the batch carries (a pipeline run's run_id). With it,
@@ -179,30 +176,25 @@ object Upsert {
     * value yet; a row in another bucket fails the upsert and leaves the
     * table as it was. Without it, the batch takes the whole-table path, so
     * its plan runs once and never passes through the driver.
-    *
-    * `bucketed = false` keeps the table flat (and flattens a bucketed
-    * one): every upsert merges the whole table and writes it without a
-    * shuffle. That suits a table whose batches never carry one first-key
-    * value, such as a streaming sink keyed by query or event id; there
-    * the bucketed whole-table path only adds a shuffle and 16 files.
     */
   def upsertParquet(spark: SparkSession, dir: String, updates: DataFrame,
-      keys: Seq[String], versionCol: String, firstKey: Option[Any] = None,
-      bucketed: Boolean = true): Unit = {
+      keys: Seq[String], versionCol: String, firstKey: Option[Any] = None): Unit = {
     require(!updates.columns.contains(BucketCol),
       s"upsert batch has a column named $BucketCol, which the table layout reserves")
-    require(bucketed || firstKey.isEmpty, "a flat table has no bucket to name")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val table = new Path(dir)
     recover(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old"))
-    if (fs.exists(table)) (0 until Buckets).foreach { k =>
-      val live = bucketDir(table, k)
-      recover(fs, live, hidden(live, "tmp"), hidden(live, "old"))
+    if (fs.exists(table)) {
+      require(bucketDirs(fs, table).nonEmpty || dataFiles(fs, table).isEmpty,
+        s"table $dir holds data files outside any $BucketCol directory")
+      (0 until Buckets).foreach { k =>
+        val live = bucketDir(table, k)
+        recover(fs, live, hidden(live, "tmp"), hidden(live, "old"))
+      }
     }
     val buckets = bucketDirs(fs, table)
-    val isBucketed = buckets.nonEmpty
-    firstKey.filter(_ => isBucketed) match {
-      case Some(value) =>
+    firstKey match {
+      case Some(value) if buckets.nonEmpty =>
         val k = bucketOf(value)
         val live = bucketDir(table, k)
         val schema = tableSchema(fs, buckets)
@@ -231,25 +223,23 @@ object Upsert {
               .write.format(Format).mode("overwrite").save(tmp.toString)
           }
         }
-      case None => replaceTable(spark, fs, dir, bucketed) {
-        case Some(prev) =>
-          val base = if (isBucketed) prev.drop(BucketCol) else {
-            require(!prev.columns.contains(BucketCol),
-              s"table $dir has a column named $BucketCol, which the table layout reserves")
-            prev
-          }
-          val merged = merge(base, updates, keys, versionCol)
-          if (bucketed) merged.withColumn(BucketCol, bucket(col(keys.head)))
-            .repartition(spark.sparkContext.defaultParallelism, col(BucketCol))
-          // fold the batch into the table's own partitions, so the file
-          // count does not grow by the batch's files on every upsert
-          else merged.coalesce(prev.rdd.getNumPartitions.max(1))
-        case None if bucketed =>
+      case _ => swapIn(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old")) { tmp =>
+        val out =
+          if (fs.exists(table))
+            merge(spark.read.parquet(dir).drop(BucketCol), updates, keys, versionCol)
+              .withColumn(BucketCol, bucket(col(keys.head)))
+              .repartition(spark.sparkContext.defaultParallelism, col(BucketCol))
           // one window over (bucket, keys) on a shuffle by bucket: its sort
           // already orders the partitioned write, which adds none of its own
-          latestPerKey(updates.withColumn(BucketCol, bucket(col(keys.head))),
+          else latestPerKey(updates.withColumn(BucketCol, bucket(col(keys.head))),
             keys, versionCol, clusterBy = Seq(BucketCol))
-        case None => latestPerKey(updates, keys, versionCol)
+        out.write.format(Format).partitionBy(BucketCol).mode("overwrite").save(tmp.toString)
+        // a partitioned write of no rows leaves no data file, so the table's
+        // schema would be lost and every later read would fail
+        if (bucketDirs(fs, tmp).isEmpty)
+          spark.createDataFrame(java.util.List.of[Row](),
+              StructType(out.schema.filterNot(_.name == BucketCol)))
+            .write.format(Format).save(bucketDir(tmp, 0).toString)
       }
     }
   }
@@ -265,8 +255,8 @@ object Upsert {
   /** The directory of bucket `k` of the table at `table`. */
   def bucketDir(table: Path, k: Int): Path = new Path(table, s"$BucketCol=$k")
 
-  /** The bucket directories of the table at `table`; none when it is flat
-    * or does not exist.
+  /** The bucket directories of the table at `table`; none when it does not
+    * exist.
     */
   def bucketDirs(fs: FileSystem, table: Path): Seq[Path] =
     if (!fs.exists(table)) Nil
@@ -411,38 +401,37 @@ object Upsert {
   def replaceParquet(spark: SparkSession, dir: String)
       (mergeFn: Option[DataFrame] => DataFrame): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(fs, new Path(dir), new Path(dir + "__tmp"), new Path(dir + "__old"))
-    replaceTable(spark, fs, dir, bucketed = false)(mergeFn)
-  }
-
-  /** The whole-table swap. A `bucketed` replacement carries [[BucketCol]]
-    * and is written partitioned by it. A partitioned write of no rows
-    * leaves no data file, so the table's schema would be lost and every
-    * later read would fail; an empty replacement therefore gets one
-    * schema-only file in bucket 0.
-    */
-  private def replaceTable(spark: SparkSession, fs: FileSystem, dir: String,
-      bucketed: Boolean)(mergeFn: Option[DataFrame] => DataFrame): Unit = {
     val table = new Path(dir)
+    recover(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old"))
     swapIn(fs, table, new Path(dir + "__tmp"), new Path(dir + "__old")) { tmp =>
-      val out = mergeFn(if (fs.exists(table)) Some(spark.read.parquet(dir)) else None)
-      if (!bucketed) out.write.format(Format).mode("overwrite").save(tmp.toString)
-      else {
-        out.write.format(Format).partitionBy(BucketCol).mode("overwrite").save(tmp.toString)
-        if (!fs.listStatus(tmp).exists(_.getPath.getName.startsWith(BucketCol + "=")))
-          spark.createDataFrame(java.util.List.of[Row](),
-              StructType(out.schema.filterNot(_.name == BucketCol)))
-            .write.format(Format).save(bucketDir(tmp, 0).toString)
-      }
+      mergeFn(if (fs.exists(table)) Some(spark.read.parquet(dir)) else None)
+        .write.format(Format).mode("overwrite").save(tmp.toString)
     }
   }
+
+  /** A keyed last-write-wins upsert into the flat parquet table at `dir`,
+    * merged whole on every write ([[merge]]) and swapped by
+    * [[replaceParquet]]; the first write is the batch deduplicated by
+    * [[latestPerKey]]. It suits a table whose batches span many keys, such
+    * as a streaming sink keyed by query or event id, which
+    * [[upsertParquet]]'s buckets would only add a shuffle and 16 files to.
+    */
+  def mergeParquet(spark: SparkSession, dir: String, updates: DataFrame,
+      keys: Seq[String], versionCol: String): Unit =
+    replaceParquet(spark, dir) {
+      // fold the batch into the table's own partitions, so the file count
+      // does not grow by the batch's files on every upsert
+      case Some(prev) =>
+        merge(prev, updates, keys, versionCol).coalesce(prev.rdd.getNumPartitions.max(1))
+      case None => latestPerKey(updates, keys, versionCol)
+    }
 
   /** Crash recovery for one swap: a swap that died between its two
     * renames leaves the live copy at `old` and none at `live`. Restore it
     * FIRST, or the next swap would both merge against nothing and delete
     * the only surviving copy; then delete whatever tmp or old copy is left.
     */
-  private def recover(fs: FileSystem, live: Path, tmp: Path, old: Path): Unit = {
+  private[graft] def recover(fs: FileSystem, live: Path, tmp: Path, old: Path): Unit = {
     if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
       throw new RuntimeException(s"recovery failed: $old -> $live")
     Seq(tmp, old).foreach(p => if (fs.exists(p)) fs.delete(p, true))
@@ -451,11 +440,11 @@ object Upsert {
   /** The swap commit, run after [[recover]]: `write(tmp)`,
     * rename `live` aside to `old`, rename `tmp` to `live`, drop `old`. A
     * failed write deletes its tmp; a crash between the renames leaves
-    * `old` for the next [[recover]].
+    * `old` for the next [[recover]]. Returns what `write` returned.
     */
-  private def swapIn(fs: FileSystem, live: Path, tmp: Path, old: Path)
-      (write: Path => Unit): Unit = {
-    staging(fs, tmp)(write(tmp))
+  private[graft] def swapIn[T](fs: FileSystem, live: Path, tmp: Path, old: Path)
+      (write: Path => T): T = {
+    val result = staging(fs, tmp)(write(tmp))
     val hadLive = fs.exists(live)
     if (hadLive && !fs.rename(live, old))
       throw new RuntimeException(s"swap failed: $live -> $old")
@@ -465,6 +454,7 @@ object Upsert {
       throw new RuntimeException(s"swap failed: $tmp -> $live")
     }
     if (hadLive) fs.delete(old, true)
+    result
   }
 
   /** Run `write`, which writes under `tmp`; if it fails, delete `tmp`. */

@@ -261,7 +261,7 @@ object Streaming {
     * q_ann_topk_quant's operator).
     *
     * Results land in a (query_id, rank)-keyed parquet upsert
-    * ([[graft.etl.Upsert.upsertParquet]]): foreachBatch is
+    * ([[graft.etl.Upsert.mergeParquet]]): foreachBatch is
     * at-least-once, and the keyed last-write-wins merge (versioned by
     * the serving batch id) makes a REDELIVERED batch converge instead
     * of duplicating result rows — and a re-served query simply
@@ -281,8 +281,8 @@ object Streaming {
         val topk = graft.ann.Ann.bruteForceTopK(corpus, qCodes, idCol, "qv", k)
           .withColumn("served_batch", lit(batchId))
         // a batch spans many query ids: a flat table, merged whole
-        graft.etl.Upsert.upsertParquet(spark, outDir, topk,
-          keys = Seq("query_id", "rank"), versionCol = "served_batch", bucketed = false)
+        graft.etl.Upsert.mergeParquet(spark, outDir, topk,
+          keys = Seq("query_id", "rank"), versionCol = "served_batch")
       }
 
   /** Streaming VECTOR INGEST — the growing-corpus half of the quantized
@@ -746,8 +746,8 @@ object Streaming {
     * against that fixed baseline ([[graft.ops.AnomalyGate.gate]] — the
     * same definition the batch q_outliers gate uses, so stream and
     * batch can never disagree about what an outlier is). Flagged rows
-    * upsert keyed by event_id: a redelivered batch converges instead
-    * of duplicating alerts.
+    * upsert keyed by event_id ([[graft.etl.Upsert.mergeParquet]]): a
+    * redelivered batch converges instead of duplicating alerts.
     *
     * Scale: the moment table is |event types| rows (broadcast inside
     * the gate); per batch the work is one narrow scoring pass over the
@@ -765,8 +765,8 @@ object Streaming {
           .gate(batch0.dropDuplicates("event_id"), moments, threshold)
           .withColumn("served_batch", lit(batchId))
         // a batch spans many event ids: a flat table, merged whole
-        graft.etl.Upsert.upsertParquet(spark, outDir, flagged,
-          keys = Seq("event_id"), versionCol = "served_batch", bucketed = false)
+        graft.etl.Upsert.mergeParquet(spark, outDir, flagged,
+          keys = Seq("event_id"), versionCol = "served_batch")
       }
 
   /** Streaming DELETION-REQUEST feed (the CDC shape of

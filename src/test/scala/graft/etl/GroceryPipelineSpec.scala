@@ -124,7 +124,8 @@ class GroceryPipelineSpec extends AnyFunSuite with SparkSpec {
     paths.mkdirs()
     val wh = s"$base/wh"
     import spark.implicits._
-    Seq.tabulate(12)(i => (runId, s"t$i")).toDF("run_id", "txn_id").write.parquet(wh)
+    Upsert.upsertParquet(spark, wh, Seq.tabulate(12)(i => (runId, s"t$i", 1L))
+      .toDF("run_id", "txn_id", "v"), Seq("run_id", "txn_id"), "v")
     assert(GroceryPipeline.reconcile(spark, paths, wh).pass)
     val verdict = new ObjectMapper().readTree(new java.io.File(paths.reconcileFile))
     assert(verdict.get("run_id").asText == runId)

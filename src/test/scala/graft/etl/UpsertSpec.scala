@@ -56,14 +56,6 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("insertIfAbsent: existing keys never overwritten (ON CONFLICT DO NOTHING)") {
-    val out = Upsert.insertIfAbsent(base, updates, keys)
-      .as[(String, String, Long, Long)].collect().toSet
-    assert(out == Set(
-      ("r1", "t1", 100L, 1L), ("r1", "t2", 200L, 1L), // t2 keeps the OLD value
-      ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
-  }
-
   test("upsertParquet: create, then merge-with-swap; reapplying is stable") {
     val dir = Files.createTempDirectory("upsert").toString + "/fct"
     Upsert.upsertParquet(spark, dir, base, keys, "v")
@@ -364,38 +356,20 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     assert(read(dir) == runs("run-0" +: fresh, 1).as[(String, String, Long, Long)].collect().toSet)
   }
 
-  test("bucketed = false keeps a table flat, and flattens a bucketed one") {
+  test("mergeParquet keeps a flat table: an empty first batch, a merge, a re-apply") {
     val dir = Files.createTempDirectory("upsert").toString + "/fct"
     def flat = new java.io.File(dir).list().forall(!_.startsWith(Upsert.BucketCol))
-    Upsert.upsertParquet(spark, dir, base.limit(0), keys, "v", bucketed = false)
+    Upsert.mergeParquet(spark, dir, base.limit(0), keys, "v")
     assert(flat && spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
     assert(spark.read.parquet(dir).count() == 0)
-    Upsert.upsertParquet(spark, dir, base, keys, "v", bucketed = false)
-    Upsert.upsertParquet(spark, dir, updates, keys, "v", bucketed = false)
+    Upsert.mergeParquet(spark, dir, base, keys, "v")
+    Upsert.mergeParquet(spark, dir, updates, keys, "v")
     val merged = Set(("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
       ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L))
     assert(flat && spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
     assert(read(dir) == merged)
-    Upsert.upsertParquet(spark, dir, updates, keys, "v")
-    assert(!flat && bucketFiles(dir).nonEmpty && read(dir) == merged)
-    Upsert.upsertParquet(spark, dir, updates, keys, "v", bucketed = false)
+    Upsert.mergeParquet(spark, dir, updates, keys, "v")
     assert(flat && read(dir) == merged)
-    intercept[IllegalArgumentException] {
-      Upsert.upsertParquet(spark, dir, updates, keys, "v", firstKey = Some("r1"), bucketed = false)
-    }
-  }
-
-  test("a flat table written by the old layout converts on its first upsert") {
-    val dir = Files.createTempDirectory("upsert").toString + "/fct"
-    base.write.parquet(dir)
-    assert(spark.read.parquet(dir).columns.toSeq == base.columns.toSeq)
-    Upsert.upsertParquet(spark, dir, updates, keys, "v")
-    assert(new java.io.File(dir).list().count(_.endsWith(".parquet")) == 0)
-    assert(bucketFiles(dir).keySet == Set(s"__bucket=${bucketOf("r1")}"))
-    assert(spark.read.parquet(dir).columns.toSeq == base.columns.toSeq :+ Upsert.BucketCol)
-    assert(read(dir) == Set(
-      ("r1", "t1", 100L, 1L), ("r1", "t2", 999L, 2L),
-      ("r1", "t3", 300L, 1L), ("r1", "t4", 400L, 2L)))
   }
 
   test("a user column named __bucket is refused, in the batch or in a flat table") {
@@ -405,10 +379,22 @@ class UpsertSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e.getMessage.contains(Upsert.BucketCol))
     assert(!new java.io.File(dir).exists())
-    base.withColumn(Upsert.BucketCol, lit(3)).write.parquet(dir)
-    intercept[IllegalArgumentException] {
-      Upsert.upsertParquet(spark, dir, updates, keys, "v")
+    // a flat table, with or without a __bucket column (the layout before
+    // buckets, or a plain write), is refused before anything is written
+    def refused(table: org.apache.spark.sql.DataFrame): Unit = {
+      val dir = Files.createTempDirectory("upsert").toString + "/fct"
+      table.write.parquet(dir)
+      val files = new java.io.File(dir).list().toSet
+      Seq(None, Some("r1")).foreach { firstKey =>
+        val e = intercept[IllegalArgumentException] {
+          Upsert.upsertParquet(spark, dir, updates, keys, "v", firstKey = firstKey)
+        }
+        assert(e.getMessage.contains(Upsert.BucketCol))
+        assert(new java.io.File(dir).list().toSet == files)
+        assert(spark.read.parquet(dir).count() == 3)
+      }
     }
-    assert(spark.read.parquet(dir).count() == 3)
+    refused(base.withColumn(Upsert.BucketCol, lit(3)))
+    refused(base)
   }
 }
